@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.concurrent.TrieMap
 
-/** One-call stale-on-rewrite hook for every session-memoized cache in
-  * the engine (ADVICE r15: QualityFilter lacked the hook and nothing
-  * tied the per-object hooks together). Long-lived JVMs that rewrite a
-  * corpus dir in place call this once; each object's own
-  * invalidateCache stays callable individually for scoped refreshes.
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+
+/** Session-scoped reuse: the one memo behind every shared frame and
+  * fitted model in the engine, and the lineage cut for shared frames.
   */
 object Caches {
 
@@ -28,24 +27,57 @@ object Caches {
     * `checkpoint()` to the cluster FS; same lineage cut, fault-tolerant
     * storage). At local[*] there is no executor loss.
     *
-    * Invalidation contract: dropping the TrieMap reference orphans the
+    * Invalidation contract: dropping the memo reference orphans the
     * checkpointed RDD and the ContextCleaner unpersists its blocks
-    * after the next GC; the pre-existing `unpersist(blocking=false)`
-    * calls in each invalidateCache are harmless no-ops on a
-    * checkpointed frame. */
+    * after the next GC; invalidate's `unpersist(blocking=false)` is a
+    * harmless no-op on a checkpointed frame. */
   def pin(df: DataFrame): DataFrame = df.localCheckpoint()
 
-  def invalidate(s: SparkSession): Unit = {
-    queries.Extended.invalidateCache(s)
-    queries.TextAnalysis.invalidateCache(s)
-    queries.Embeddings.invalidateCache(s)
-    queries.GraphQueries.invalidateCache(s)
-    ml.QualityFilter.invalidateCache(s)
-    // DupProbe's memo is not just a cost router anymore (ADVICE r16):
-    // since r16 its (count, dupFactor) feeds the analytic safety gates
-    // (lshNearDupPairs' nEff, lshTopK's rerank-mass estimate), so a
-    // stale entry after an in-place dir rewrite could admit a plan the
-    // gate exists to block. It must ride the one-call hook.
-    operators.DupProbe.invalidate(s)
+  /** One memo slot. A build runs under the cell's own lock, so callers
+    * of one key wait for a single build while builds of other keys
+    * (including nested ones) proceed. */
+  private final class Cell {
+    @volatile var value: Option[Any] = None
+    var failed = false
   }
+
+  private val cells = TrieMap.empty[(SparkSession, Any), Cell]
+
+  /** The session-memoized value of `key`, built once on first use. The
+    * key is a tuple led by a per-use name, e.g. `("bpeModel", dir)`;
+    * frame builds wrap their result in `pin`. A build that throws stores
+    * nothing: the next call (or a caller that was waiting on it) builds
+    * again. Memos assume the inputs are immutable for the life of the
+    * session: call `invalidate` after rewriting a dir in place. A build
+    * must not ask for its own key. */
+  def memo[V](s: SparkSession, key: Any)(build: => V): V = {
+    val k = (s, key)
+    val cell = cells.getOrElseUpdate(k, new Cell)
+    val built = cell.value.orElse(cell.synchronized {
+      if (cell.value.isEmpty && !cell.failed)
+        try cell.value = Some(build)
+        catch { case e: Throwable =>
+          cell.failed = true
+          cells.remove(k, cell)
+          throw e
+        }
+      cell.value
+    })
+    built match {
+      case Some(v) => v.asInstanceOf[V]
+      case None => memo(s, key)(build) // waited on a build that threw
+    }
+  }
+
+  /** Drop every memo of `s` — a dir rewritten in place, or session
+    * teardown in a long-lived multi-session JVM (entries otherwise pin
+    * the session and its blocks; the harness mains are one session per
+    * JVM, so they never need this). */
+  def invalidate(s: SparkSession): Unit =
+    cells.keys.filter(_._1 eq s).foreach { k =>
+      cells.remove(k).flatMap(_.value).foreach {
+        case df: Dataset[_] => df.unpersist(blocking = false)
+        case _ => ()
+      }
+    }
 }

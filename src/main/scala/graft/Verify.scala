@@ -11,13 +11,33 @@ import java.util.concurrent.{Callable, Executors, TimeUnit, TimeoutException}
   * in an environment measured 5-20× slower than local):
   *  - oracle_sql.json is written FIRST, before any query runs, so a
   *    partial pass still yields per-query comparisons;
-  *  - queries run oracle-checked-core-first (SparkEntry.runOrder);
+  *  - queries run oracle-checked-core-first (SparkEntry.queries is
+  *    declared in run order);
   *  - each query runs under a job-group with a wall cap
   *    (SPARK_GRAFT_VERIFY_CAP seconds, default 120) so one pathological
   *    query cannot eat the whole budget;
   *  - per-query seconds go to stderr for post-mortem triage.
   */
 object Verify {
+
+  /** The oracle_sql.json entries: every static oracle plus each fitted
+    * one, prepared from the session-memoized fits the query runs then
+    * reuse (that identity is what makes the embedded literals exact). A
+    * prepare that returns None leaves its query rows-only by design. A
+    * prepare that throws gets an entry that raises in DuckDB, so the
+    * compare counts a failure instead of a silent rows-only query. */
+  def oracleEntries(spark: SparkSession, dir: String): Map[String, String] =
+    SparkEntry.oracleSql ++ SparkEntry.fittedOracles.flatMap {
+      case (name, prepare) =>
+        try prepare(spark, dir).map(name -> _)
+        catch { case e: Throwable =>
+          val msg = e.toString.take(200)
+          System.err.println(s"[verify] $name oracle prepare failed: $msg")
+          val lit = msg.replace("'", "''")
+          Some(name -> s"SELECT error('oracle prepare failed: $lit')")
+        }
+    }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional trailing args: run only these queries (local iteration;
@@ -52,58 +72,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // The dynamic oracles: q_bpe_tokens embeds the corpus-learned merge
-    // ranks and q_ivf_topk the fitted quantizer centroids, so both must
-    // be learned BEFORE the dump (and the query runs below then reuse
-    // the same session-memoized state — that identity is what makes the
-    // embedded literals exact). Each is guarded so a failure costs only
-    // its entry (rows-only fallback), never the dump-first contract.
-    try graft.queries.TextAnalysis.prepareBpeOracle(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] bpe oracle pre-learn failed: " +
-        e.toString.take(200))
-    }
-    try graft.queries.Extended.prepareIvfOracle(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] ivf oracle pre-fit failed: " +
-        e.toString.take(200))
-    }
-    try graft.queries.Embeddings.prepareSemDedupOracle(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] semdedup oracle pre-fit failed: " +
-        e.toString.take(200))
-    }
-    try graft.queries.Extended.prepareP2Oracle(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] p2 oracle prepare failed: " +
-        e.toString.take(200))
-    }
-    try graft.queries.Extended.preparePqOracle(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] pq oracle pre-fit failed: " +
-        e.toString.take(200))
-    }
-    try graft.queries.Extended.prepareIvfPqOracle(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] ivfpq oracle pre-fit failed: " +
-        e.toString.take(200))
-    }
-    try graft.ml.QualityFilter.prepareOracle(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] quality-classifier oracle pre-fit " +
-        s"failed: ${e.toString.take(200)}")
-    }
-    try graft.queries.Extended.prepareLinkpredAnnOracle(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] linkpred-ann oracle pre-fit failed: " +
-        e.toString.take(200))
-    }
-    try graft.queries.Extended.prepareLinkpredE2eOracle(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] linkpred-e2e oracle pre-fit failed: " +
-        e.toString.take(200))
-    }
-    val json = SparkEntry.oracleSql
+    val json = oracleEntries(spark, sfDir)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 

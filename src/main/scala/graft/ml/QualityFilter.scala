@@ -72,21 +72,9 @@ object QualityFilter {
     * oracle cannot recompute it — instead ONE fit per (session, corpus,
     * budget) serves both the query and the coefficient-embed oracle,
     * which replays the pure scoring function of THESE coefficients. */
-  private val models = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), LogisticRegressionModel]
-
-  /** Drop this session's memoized fits — the same stale-on-rewrite
-    * contract as Extended/TextAnalysis/Embeddings/GraphQueries
-    * .invalidateCache (ADVICE r15): after a dir rewrite the classifier
-    * must refit rather than silently score with coefficients trained
-    * on the old corpus; dropping by session also releases keys of
-    * stopped sessions instead of retaining them for the JVM lifetime. */
-  def invalidateCache(s: SparkSession): Unit =
-    models.keys.filter(_._1 eq s).foreach(models.remove)
-
   def modelFor(s: SparkSession, dir: String,
       maxIter: Int = 20): LogisticRegressionModel =
-    models.getOrElseUpdate((s, dir, maxIter), {
+    graft.Caches.memo(s, ("qualityModel", dir, maxIter)) {
       import s.implicits._
       val a = assembled(s, dir).filter(!$"holdout").cache()
       try {
@@ -96,7 +84,7 @@ object QualityFilter {
           .setFeaturesCol("features")
           .fit(a)
       } finally a.unpersist(blocking = false)
-    })
+    }
 
   /** Score the holdout with the memoized fit and emit the confusion
     * counts — the slim per-round driver signal, hash-checked against
@@ -118,17 +106,11 @@ object QualityFilter {
       .orderBy($"label", $"pred")
   }
 
-  /** The q_quality_classifier oracle SQL, set by Verify via
-    * prepareOracle before the dump; absent (rows-only) until then. */
-  @volatile private var oracle: Option[String] = None
-
-  def oracleSqlEntry: Map[String, String] =
-    oracle.map("q_quality_classifier" -> _).toMap
-
-  def prepareOracle(s: SparkSession, dir: String): Unit = {
-    oracle = None // a failed prepare must fall back to rows-only
+  /** The q_quality_classifier oracle: the memoized fit's coefficients
+    * embedded in the scoring replay. */
+  def prepareOracle(s: SparkSession, dir: String): Option[String] = {
     val m = modelFor(s, dir)
-    oracle = Some(graft.LrReplaySql.qualityClassifierSql(
+    Some(graft.LrReplaySql.qualityClassifierSql(
       m.coefficients.toArray, m.intercept))
   }
 }

@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,12 +27,10 @@ import org.apache.spark.sql.functions._
   * memo ALSO feeds analytic SAFETY GATES (Ann.lshNearDupPairs' nEff,
   * Ann.lshTopK's rerank-mass estimate): a stale under-count there can
   * silently admit a cluster-scale join the gate exists to block, so
-  * the memo now gates BEHAVIOR, not just cost. Accordingly
-  * graft.Caches.invalidate drops this memo too (ADVICE r16). The memo
-  * assumes inputs are immutable for the life of the session — the same
-  * assumption every session cache in this engine makes (twinClasses,
-  * scoredNearDupPairs, Embeddings.exactPairs); call `invalidate` if a
-  * dir is rewritten in place.
+  * the memo gates BEHAVIOR, not just cost. It is a graft.Caches.memo
+  * entry like every session memo, so it assumes inputs are immutable
+  * for the life of the session and graft.Caches.invalidate drops it
+  * after a dir is rewritten in place.
   */
 object DupProbe {
 
@@ -52,8 +48,6 @@ object DupProbe {
     * factor — its work is a function of distinct vectors only). */
   val CollapseDupFactor = 1.4
 
-  private val cache = TrieMap.empty[(SparkSession, Int), (Long, Double)]
-
   /** Row count AND exact-duplication factor of `frame` under the content
     * key `key` — total rows, and rows ÷ approx_count_distinct(
     * xxhash64(key…), 2%). ONE linear map-side-combinable pass on first
@@ -62,38 +56,28 @@ object DupProbe {
     * (session, probe-plan semantic hash) afterwards. */
   def stats(frame: DataFrame, key: Column*): (Long, Double) = {
     val keyed = frame.select(xxhash64(key: _*).as("k"))
-    cache.getOrElseUpdate((frame.sparkSession, keyed.semanticHash()), {
+    graft.Caches.memo(frame.sparkSession, ("dupStats", keyed.semanticHash())) {
       val r = keyed
         .agg(count(lit(1)).as("n"), approx_count_distinct(col("k"), 0.02).as("u"))
         .head()
       val n = r.getLong(0)
       (n, n.toDouble / math.max(1L, r.getLong(1)).toDouble)
-    })
+    }
   }
 
   /** Exact-duplication factor alone (see `stats`). */
   def dupFactor(frame: DataFrame, key: Column*): Double =
     stats(frame, key: _*)._2
 
-  private val countCache = TrieMap.empty[(SparkSession, Int), Long]
-
   /** Memoized `frame.count()` keyed by (session, plan semantic hash) —
     * for analytic gates that need a plain row count on a frame with no
     * content key (ADVICE r16: lshTopK re-ran `queries.count()` on every
-    * call). Same immutability assumption and invalidate hook as
-    * `stats`. */
+    * call). Same immutability assumption as `stats`. */
   def rowCount(frame: DataFrame): Long =
-    countCache.getOrElseUpdate(
-      (frame.sparkSession, frame.semanticHash()), frame.count())
+    graft.Caches.memo(frame.sparkSession, ("rowCount", frame.semanticHash()))(
+      frame.count())
 
   /** True when the valve should take the collapsed branch. */
   def shouldCollapse(frame: DataFrame, key: Column*): Boolean =
     dupFactor(frame, key: _*) >= CollapseDupFactor
-
-  /** Drop this session's memoized probes (a `dir` rewritten in place, or
-    * session teardown in a multi-session JVM). */
-  def invalidate(s: SparkSession): Unit = {
-    cache.keys.filter(_._1 eq s).foreach(cache.remove)
-    countCache.keys.filter(_._1 eq s).foreach(countCache.remove)
-  }
 }

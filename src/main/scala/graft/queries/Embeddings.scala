@@ -85,9 +85,6 @@ object Embeddings {
     * loosest any consumer (q_cosine_neardup, lshRecall) asks for. */
   val BaseCosineThreshold = 0.35
 
-  private val exactPairCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   /** Table count of the shared sign-LSH banding frame — the widest any
     * consumer asks for (lshRecall's pinned-recall gate). */
   val SharedLshTables = 48
@@ -98,9 +95,6 @@ object Embeddings {
     * in sync with each other and with the AnnSpec prefix pin (ADVICE
     * r17 #3). */
   val ProductionLshTables = 32
-
-  private val lshCandCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
   /** The corpus frame both sign-LSH consumers bucket — ONE construction
     * so the DupProbe memo and the shared banding frame key identically. */
@@ -121,10 +115,9 @@ object Embeddings {
     * Consumers fall back to their own independent Ann call whenever the
     * 48-table gate estimate would refuse — so each query's feasible
     * region and gate message are EXACTLY its historical ones, and the
-    * shared pass exists only where it is safe. Dropped by
-    * invalidateCache (stale-on-rewrite). */
+    * shared pass exists only where it is safe. */
   private[graft] def lshBandedCandidates(s: SparkSession, dir: String): DataFrame =
-    lshCandCache.getOrElseUpdate((s, dir),
+    graft.Caches.memo(s, ("lshBandedCandidates", dir))(
       graft.Caches.pin(graft.operators.Ann.lshNearDupPairsTagged(
         lshCorpus(s, dir), BaseCosineThreshold,
         nTables = SharedLshTables, nBits = 4)))
@@ -138,25 +131,8 @@ object Embeddings {
     * holds it at any scale where the pair join itself is feasible — the
     * same shared-CTE pattern as TextAnalysis.scoredNearDupPairs. */
   def exactNearDupPairs(s: SparkSession, dir: String): DataFrame =
-    exactPairCache.getOrElseUpdate((s, dir),
+    graft.Caches.memo(s, ("exactNearDupPairs", dir))(
       graft.Caches.pin(cosineNearDupPairsOn(s, dir, BaseCosineThreshold)))
-
-  /** Drop this session's materialized pair frames — for a `dir` rewritten
-    * in place or session teardown in a multi-session JVM (the harness
-    * mains are one-session-per-JVM). Sibling: TextAnalysis
-    * .invalidateCache. */
-  def invalidateCache(s: SparkSession): Unit = {
-    exactPairCache.keys.filter(_._1 eq s).foreach { k =>
-      exactPairCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-    lshCandCache.keys.filter(_._1 eq s).foreach { k =>
-      lshCandCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-    // the memoized quantizer fit is corpus state exactly like the pair
-    // frame: centroids fitted on a rewritten dir would silently feed
-    // q_semantic_dedup (ADVICE r13)
-    semCentroids.keys.filter(_._1 eq s).foreach(semCentroids.remove)
-  }
 
   /** The direct (uncached) exact pair plan; see cosineNearDup. Adaptive
     * exact-twin collapse (r11): on a duplicated corpus the label blocks
@@ -459,13 +435,10 @@ object Embeddings {
     * Centroids are learned Spark-side state, so this is a rows-only
     * driver query; the full decision path is recomputed driver-side in
     * the spec. */
-  /** Session-memoized SemDeDup quantizer state for the default query
-    * shape (nCells derived, 3 Lloyd passes, seed 42). */
-  private val semCentroids = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[Array[Double]]]
-
-  /** The memoized default-shape fit, computable standalone (Verify's
-    * oracle prepare may run before the query does). Valve-aware (r13,
+  /** The session-memoized SemDeDup quantizer state for the default
+    * query shape (nCells derived, 3 Lloyd passes, seed 42), computable
+    * standalone (Verify's oracle prepare may run before the query
+    * does). Valve-aware (r13,
     * VERDICT r11 #8): on a dup-heavy corpus the quantizer fits WEIGHTED
     * on exact-twin class reps (Σ w·v / Σ w sees the same mass at
     * distinct-vector cost) and nCells follows the scale law on DISTINCT
@@ -473,7 +446,7 @@ object Embeddings {
     * with the duplication factor. The oracle stays sound whichever
     * branch fit: it embeds THESE centroids and replays downstream. */
   def semCentroidsFor(s: SparkSession, dir: String): Seq[Array[Double]] =
-    semCentroids.getOrElseUpdate((s, dir), {
+    graft.Caches.memo(s, ("semCentroids", dir)) {
       import s.implicits._
       val e = Tables.embeddings(s, dir)
       if (graft.operators.DupProbe.shouldCollapse(e, $"embedding")) {
@@ -499,28 +472,19 @@ object Embeddings {
           graft.operators.Ann.ivfFit(cv, cells, lloydIters = 3, seed = 42)
         } finally cv.unpersist(blocking = false)
       }
-    })
+    }
 
-  /** The q_semantic_dedup oracle SQL, set by Verify via
-    * prepareSemDedupOracle before the dump; None (rows-only) until then. */
-  @volatile private var semDedupOracle: Option[String] = None
-
-  def semDedupOracleSqlEntry: Map[String, String] =
-    semDedupOracle.map("q_semantic_dedup" -> _).toMap
-
-  /** Build the q_semantic_dedup replay oracle from the memoized fit:
-    * DuckDB independently recomputes the argmax cell assignment and the
-    * top-3 probe list from the embedded centroid literals, the
-    * cosine-thresholded candidate pairs over shared probe cells, the
-    * connected components via a recursive min-label reachability CTE
-    * (edges are symmetric, so min reachable id ≡ the group minimum
-    * Graph.connectedComponents converges to), and the min-id keep
-    * election. */
-  def prepareSemDedupOracle(s: SparkSession, dir: String): Unit = {
-    semDedupOracle = None  // a failed prepare must fall back to rows-only
+  /** The q_semantic_dedup replay oracle from the memoized fit (None,
+    * rows-only, for an empty fit): DuckDB independently recomputes the
+    * argmax cell assignment and the top-3 probe list from the embedded
+    * centroid literals, the cosine-thresholded candidate pairs over
+    * shared probe cells, the connected components via a recursive
+    * min-label reachability CTE (edges are symmetric, so min reachable
+    * id ≡ the group minimum Graph.connectedComponents converges to),
+    * and the min-id keep election. */
+  def prepareSemDedupOracle(s: SparkSession, dir: String): Option[String] = {
     val cs = semCentroidsFor(s, dir)
-    semDedupOracle =
-      if (cs.isEmpty) None else Some(buildSemDedupOracleSql(cs))
+    if (cs.isEmpty) None else Some(buildSemDedupOracleSql(cs))
   }
 
   private[graft] def buildSemDedupOracleSql(

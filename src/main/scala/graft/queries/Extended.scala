@@ -494,17 +494,13 @@ object Extended {
     * few KB total): the overlap query references the frame four times
     * (exploded ranks, source list ×2, union join), and an unpersisted
     * plan re-runs the corpus token-hash pass per reference — the
-    * exactPairCache/ivfCentroids discipline, wired into
-    * invalidateCache below. */
-  private val sketchCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
+    * exactNearDupPairs/ivfCentroidsFor discipline. */
   def sketchOverlap(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val k = 256
     val rank = udf((v: Long) =>
       graft.functions.SketchAggs.mix(v ^ graft.functions.SketchAggs.mix(42L)))
-    val sketches = sketchCache.getOrElseUpdate((s, dir),
+    val sketches = graft.Caches.memo(s, ("sketchOverlap", dir))(
       graft.Caches.pin(Tables.documents(s, dir)
         .select($"source", explode(split($"text", " ")).as("tok"))
         .select($"source", xxhash64($"tok").as("hv"))
@@ -850,12 +846,9 @@ object Extended {
     * operator's own terminal threshold filter), q_retrieval_eval and
     * the ANN-e2e candidate tier consume the threshold-0 frame directly.
     * At sfp100 each consumer previously paid the ~30 s banding cold
-    * independently. Dropped by invalidateCache (stale-on-rewrite). */
-  private val minhashCandCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
+    * independently. */
   def minhashCandidates(s: SparkSession, dir: String): DataFrame =
-    minhashCandCache.getOrElseUpdate((s, dir), {
+    graft.Caches.memo(s, ("minhashCandidates", dir)) {
       import s.implicits._
       val d = Tables.documents(s, dir)
         .select($"doc_id", TextAnalysis.toks($"text").as("tokens"))
@@ -863,7 +856,7 @@ object Extended {
       graft.Caches.pin(graft.operators.Dedup
         .minhashNearDup(d, "doc_id", "tokens", shingleN = 2,
           k = 32, bands = 8, threshold = 0.0))
-    })
+    }
 
   /** Driver-visible recall gate for the MinHash banding tier: every exact
     * same-lang n-gram-Jaccard pair at 0.7 — the threshold where the
@@ -1095,12 +1088,9 @@ object Extended {
     * makes the q_ivf_topk oracle sound: the Lloyd mean is a distributed
     * float aggregate whose ulps can vary between fits, so the oracle
     * must embed exactly the centroid doubles the query run used — the
-    * bpeModels device applied to the quantizer. */
-  private val ivfCentroids = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[Array[Double]]]
-
+    * bpeModel device applied to the quantizer. */
   def ivfCentroidsFor(s: SparkSession, dir: String): Seq[Array[Double]] =
-    ivfCentroids.getOrElseUpdate((s, dir), {
+    graft.Caches.memo(s, ("ivfCentroids", dir)) {
       import s.implicits._
       val cv = Tables.embeddings(s, dir)
         .select($"vec_id".as("id"),
@@ -1110,25 +1100,7 @@ object Extended {
       try graft.operators.Ann.ivfFit(cv, nCells = 16, lloydIters = 1,
         seed = 42)
       finally cv.unpersist(blocking = false)
-    })
-
-  /** Drop this session's memoized quantizer fits — same stale-on-rewrite
-    * contract as TextAnalysis/Embeddings/GraphQueries.invalidateCache
-    * (ADVICE r13): after a dir rewrite, q_ivf_topk must refit rather
-    * than silently reuse centroids from the old corpus. */
-  def invalidateCache(s: SparkSession): Unit = {
-    ivfCentroids.keys.filter(_._1 eq s).foreach(ivfCentroids.remove)
-    pqCodebooks.keys.filter(_._1 eq s).foreach(pqCodebooks.remove)
-    ivfPqCodebooks.keys.filter(_._1 eq s).foreach(ivfPqCodebooks.remove)
-    lpAnnModels.keys.filter(_._1 eq s).foreach(lpAnnModels.remove)
-    lpE2eModels.keys.filter(_._1 eq s).foreach(lpE2eModels.remove)
-    sketchCache.keys.filter(_._1 eq s).foreach { key =>
-      sketchCache.remove(key).foreach(_.unpersist(blocking = false))
     }
-    minhashCandCache.keys.filter(_._1 eq s).foreach { key =>
-      minhashCandCache.remove(key).foreach(_.unpersist(blocking = false))
-    }
-  }
 
   /** IVF (inverted-file) approximate top-k over embeddings — the second
     * ANN scale path next to lshTopK (coarse k-means quantizer, nProbe of
@@ -1166,14 +1138,6 @@ object Extended {
       .orderBy($"q_id", $"rank")
   }
 
-  /** The q_similarity_join_p2 oracle SQL, set by Verify via
-    * prepareP2Oracle before the dump; None (rows-only fallback) until
-    * then. */
-  @volatile private var p2Oracle: Option[String] = None
-
-  def p2OracleSqlEntry: Map[String, String] =
-    p2Oracle.map("q_similarity_join_p2" -> _).toMap
-
   /** Build the q_similarity_join_p2 replay oracle (r14): everything
     * downstream of the Bernoulli sample is a pure function of (text,
     * MinHash coefficients), so DuckDB replays shingling, HashingTF's
@@ -1186,27 +1150,19 @@ object Extended {
     * reflection off a model fitted by the query's own fitMinHash.
     * Bounded: the collect is half of documents, ~250 ids at the verify
     * SF; anything past the cap falls back to rows-only. */
-  def prepareP2Oracle(s: SparkSession, dir: String): Unit = {
-    p2Oracle = None
+  def prepareP2Oracle(s: SparkSession, dir: String): Option[String] = {
     import s.implicits._
     val ids = Tables.documents(s, dir).sample(0.5, 12345L)
       .select($"doc_id").as[Long].collect()
-    if (ids.isEmpty || ids.length > 100000) return
+    if (ids.isEmpty || ids.length > 100000) return None
     val one = Seq(Tuple1(org.apache.spark.ml.linalg.Vectors.sparse(
       4096, Array(0), Array(1.0)))).toDF("tf")
     val coefs = graft.operators.SimilarityJoin.randCoefficientsOf(
       graft.operators.SimilarityJoin.fitMinHash(one, "tf",
         numHashTables = 3, seed = 42L))
-    p2Oracle = Some(graft.Murmur3ReplaySql.similarityJoinP2Sql(
+    Some(graft.Murmur3ReplaySql.similarityJoinP2Sql(
       ids.toIndexedSeq, coefs.toIndexedSeq))
   }
-
-  /** The q_ivf_topk oracle SQL, set by Verify via prepareIvfOracle
-    * before the dump; None (rows-only fallback) until then. */
-  @volatile private var ivfOracle: Option[String] = None
-
-  def ivfOracleSqlEntry: Map[String, String] =
-    ivfOracle.map("q_ivf_topk" -> _).toMap
 
   /** Build the q_ivf_topk replay oracle from the session-memoized
     * centroids — the fitted quantizer state is driver-known doubles, so
@@ -1215,10 +1171,9 @@ object Extended {
     * reverse(array_sort) slice order), and the exact cosine re-rank.
     * Centroid doubles embed via Double.toString (shortest round-trip
     * repr; DuckDB's parse is correctly rounded, so the bits survive). */
-  def prepareIvfOracle(s: SparkSession, dir: String): Unit = {
-    ivfOracle = None  // a failed prepare must fall back to rows-only
+  def prepareIvfOracle(s: SparkSession, dir: String): Option[String] = {
     val cs = ivfCentroidsFor(s, dir)
-    ivfOracle = if (cs.isEmpty) None else Some(buildIvfOracleSql(cs))
+    if (cs.isEmpty) None else Some(buildIvfOracleSql(cs))
   }
 
   private[graft] def buildIvfOracleSql(
@@ -1291,15 +1246,12 @@ object Extended {
     * embeddings — 64 was tuned on the real corpora (uniform random
     * vectors, PQ's structureless worst case): shortlist-recall@50 at
     * sf0.01 read 0.78 / 0.88 / 0.94 for kSub 32 / 64 / 64+4iters. */
-  private val pqCodebooks = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[Seq[Array[Double]]]]
-
   val PqMSub = 8
   val PqDSub = 8
   val PqKSub = 64
 
   def pqCodebooksFor(s: SparkSession, dir: String): Seq[Seq[Array[Double]]] =
-    pqCodebooks.getOrElseUpdate((s, dir), {
+    graft.Caches.memo(s, ("pqCodebooks", dir)) {
       import s.implicits._
       val nv = Tables.embeddings(s, dir)
         .select($"vec_id".as("id"),
@@ -1312,7 +1264,7 @@ object Extended {
       try graft.operators.Ann.pqFit(nv, PqMSub, PqDSub, PqKSub,
         lloydIters = 4, seed = 42)
       finally nv.unpersist(blocking = false)
-    })
+    }
 
   /** Product-quantization ADC approximate top-k — the third ANN scale
     * path (8-byte codes vs 256-byte raw vectors: the 32× scan-width
@@ -1362,20 +1314,18 @@ object Extended {
       .orderBy($"q_id")
   }
 
-  /** The q_pq_topk / q_pq_recall oracle SQL, set by Verify via
-    * preparePqOracle; empty (rows-only fallback) until then. */
-  @volatile private var pqOracle: Map[String, String] = Map.empty
+  /** The q_pq_topk / q_pq_recall replay oracles from the memoized
+    * codebooks; None (rows-only) when a subspace fit came back empty. */
+  private def pqOracleFit(s: SparkSession,
+      dir: String): Option[Seq[Seq[Array[Double]]]] =
+    Some(pqCodebooksFor(s, dir))
+      .filter(cb => cb.nonEmpty && cb.forall(_.nonEmpty))
 
-  def pqOracleSqlEntry: Map[String, String] = pqOracle
+  def preparePqTopKOracle(s: SparkSession, dir: String): Option[String] =
+    pqOracleFit(s, dir).map(buildPqTopKOracleSql)
 
-  def preparePqOracle(s: SparkSession, dir: String): Unit = {
-    pqOracle = Map.empty
-    val cb = pqCodebooksFor(s, dir)
-    if (cb.nonEmpty && cb.forall(_.nonEmpty))
-      pqOracle = Map(
-        "q_pq_topk" -> buildPqTopKOracleSql(cb),
-        "q_pq_recall" -> buildPqRecallOracleSql(cb))
-  }
+  def preparePqRecallOracle(s: SparkSession, dir: String): Option[String] =
+    pqOracleFit(s, dir).map(buildPqRecallOracleSql)
 
   /** Strict in-order left-fold dot of a subvector window against a
     * literal centroid — SparkEntry.dotSql's pinned convention over
@@ -1488,12 +1438,9 @@ object Extended {
     * PQ tier so the two ADC scans differ ONLY in residual coding +
     * cell pruning — which is exactly the comparison q_ivfpq_recall vs
     * q_pq_recall measures. */
-  private val ivfPqCodebooks = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[Seq[Array[Double]]]]
-
   def ivfPqCodebooksFor(s: SparkSession,
       dir: String): Seq[Seq[Array[Double]]] =
-    ivfPqCodebooks.getOrElseUpdate((s, dir), {
+    graft.Caches.memo(s, ("ivfPqCodebooks", dir)) {
       import s.implicits._
       val coarse = ivfCentroidsFor(s, dir)
       if (coarse.isEmpty) Seq.empty
@@ -1512,7 +1459,7 @@ object Extended {
           lloydIters = 4, seed = 42)
         finally res.unpersist(blocking = false)
       }
-    })
+    }
 
   /** IVF-PQ ADC approximate top-k — the tier that composes the coarse
     * quantizer's scan pruning (only nProbe of nCells cells touched)
@@ -1563,21 +1510,23 @@ object Extended {
       .orderBy($"q_id")
   }
 
-  /** The q_ivfpq_topk / q_ivfpq_recall oracle SQL, set by Verify via
-    * prepareIvfPqOracle; empty (rows-only fallback) until then. */
-  @volatile private var ivfPqOracle: Map[String, String] = Map.empty
-
-  def ivfPqOracleSqlEntry: Map[String, String] = ivfPqOracle
-
-  def prepareIvfPqOracle(s: SparkSession, dir: String): Unit = {
-    ivfPqOracle = Map.empty
+  /** The q_ivfpq_topk / q_ivfpq_recall replay oracles from the memoized
+    * coarse centroids and residual codebooks; None (rows-only) when
+    * either fit came back empty. */
+  private def ivfPqOracleFit(s: SparkSession, dir: String)
+      : Option[(Seq[Array[Double]], Seq[Seq[Array[Double]]])] = {
     val coarse = ivfCentroidsFor(s, dir)
     val cb = ivfPqCodebooksFor(s, dir)
     if (coarse.nonEmpty && cb.nonEmpty && cb.forall(_.nonEmpty))
-      ivfPqOracle = Map(
-        "q_ivfpq_topk" -> buildIvfPqTopKOracleSql(coarse, cb),
-        "q_ivfpq_recall" -> buildIvfPqRecallOracleSql(coarse, cb))
+      Some((coarse, cb))
+    else None
   }
+
+  def prepareIvfPqTopKOracle(s: SparkSession, dir: String): Option[String] =
+    ivfPqOracleFit(s, dir).map((buildIvfPqTopKOracleSql _).tupled)
+
+  def prepareIvfPqRecallOracle(s: SparkSession, dir: String): Option[String] =
+    ivfPqOracleFit(s, dir).map((buildIvfPqRecallOracleSql _).tupled)
 
   /** In-order left-fold dot of an rv subvector window against a literal
     * centroid — pqSubDot over the residual column. */
@@ -1730,6 +1679,17 @@ object Extended {
     * held-out candidates, emit the threshold-sweep metric rows. */
   def linkpredE2e(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    // sweep on probabilities bucketed to 3 decimals: bounds the distinct
+    // thresholds (≤1001) so the global-ordered cumsum window stays tiny
+    // regardless of candidate count
+    graft.ml.LinkPredictor.sweepMetrics(
+      linkpredE2eScored(s, dir)._2.withColumn("p1r", round($"p1", 3)), "p1r")
+  }
+
+  /** The q_linkpred_e2e fit and its scored held-out candidates. */
+  private def linkpredE2eScored(s: SparkSession, dir: String)
+      : (org.apache.spark.ml.classification.LogisticRegressionModel, DataFrame) = {
+    import s.implicits._
     val nodes = Tables.documents(s, dir).select(
       $"doc_id".cast("string").as("id"),
       (lit(1993) + pmod($"n_chars", lit(10))).cast("string").as("year"),
@@ -1793,41 +1753,30 @@ object Extended {
     // separate within 5 iterations (ExtendedSpec pins F1 > 0.5). Keeps the
     // query under the driver bench's 45 s cap with 5× slow-host margin.
     // Fit memoized per (session, corpus) — the coefficient-embed oracle
-    // below replays scoring with exactly these coefficients.
-    val (model, scored, _) = graft.ml.LinkPredictor.run(
-      s, nodes, train, cand, gt, maxIter = 5,
-      cachedModel = lpE2eModels.get((s, dir)))
-    lpE2eModels.putIfAbsent((s, dir), model)
+    // below replays scoring with exactly these coefficients. The cold
+    // call fits and scores in one run; warm calls only score.
+    def run(
+        cached: Option[org.apache.spark.ml.classification.LogisticRegressionModel]) =
+      graft.ml.LinkPredictor.run(s, nodes, train, cand, gt, maxIter = 5,
+        cachedModel = cached)
+    var coldScored: Option[DataFrame] = None
+    val model = graft.Caches.memo(s, ("lpE2eModel", dir)) {
+      val (m, scored, _) = run(None)
+      coldScored = Some(scored)
+      m
+    }
+    val scored = coldScored.getOrElse(run(Some(model))._2)
     pairs.unpersist(blocking = false)
-    // sweep on probabilities bucketed to 3 decimals: bounds the distinct
-    // thresholds (≤1001) so the global-ordered cumsum window stays tiny
-    // regardless of candidate count
-    graft.ml.LinkPredictor.sweepMetrics(
-      scored.withColumn("p1r", round($"p1", 3)), "p1r")
+    (model, scored)
   }
 
-  /** Session-memoized p1-e2e fit — see linkpredE2e. */
-  private val lpE2eModels = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-      org.apache.spark.ml.classification.LogisticRegressionModel]
-
-  /** The q_linkpred_e2e oracle SQL, set by Verify via
-    * prepareLinkpredE2eOracle before the dump; absent (rows-only) until
-    * then. */
-  @volatile private var lpE2eOracle: Option[String] = None
-
-  def linkpredE2eOracleSqlEntry: Map[String, String] =
-    lpE2eOracle.map("q_linkpred_e2e" -> _).toMap
-
-  /** Runs the query pipeline once (fit + score, memoizing the model) if
-    * no fit is cached yet, then embeds the coefficients into the sweep
-    * replay (oracle.LrReplaySql.linkpredE2eSql — sigmoid bucketing goes
+  /** Runs the query pipeline (fit once per session, then score) and
+    * embeds the fitted coefficients into the sweep replay
+    * (oracle.LrReplaySql.linkpredE2eSql — sigmoid bucketing goes
     * through the libm-free margin-cutoff table). */
-  def prepareLinkpredE2eOracle(s: SparkSession, dir: String): Unit = {
-    lpE2eOracle = None // a failed prepare must fall back to rows-only
-    if (!lpE2eModels.contains((s, dir))) linkpredE2e(s, dir)
-    val model = lpE2eModels((s, dir))
-    lpE2eOracle = Some(graft.LrReplaySql.linkpredE2eSql(
+  def prepareLinkpredE2eOracle(s: SparkSession, dir: String): Option[String] = {
+    val model = linkpredE2eScored(s, dir)._1
+    Some(graft.LrReplaySql.linkpredE2eSql(
       model.coefficients.toArray, model.intercept,
       graft.ml.LinkPredictor.enStopwords))
   }
@@ -1885,15 +1834,11 @@ object Extended {
     * coefficients, so query and oracle cannot drift within a session,
     * while training itself stays Spark-side and spec-gated
     * (treeAggregate float order is not replayable). */
-  private val lpAnnModels = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-      org.apache.spark.ml.classification.LogisticRegressionModel]
-
   private def lpAnnModelFor(s: SparkSession, dir: String,
-      assembled: DataFrame)
+      assembled: => DataFrame)
       : org.apache.spark.ml.classification.LogisticRegressionModel = {
     import s.implicits._
-    lpAnnModels.getOrElseUpdate((s, dir), {
+    graft.Caches.memo(s, ("lpAnnModel", dir)) {
       // maxIter 5 (was 10 — ADVICE r9 #4 fit budget, same argument as
       // linkpredE2e): each L-BFGS iteration is a treeAggregate pass over
       // the candidate frame, and the weighted boundary separates within
@@ -1903,26 +1848,22 @@ object Extended {
         .setMaxIter(5).setLabelCol("label").setFeaturesCol("features")
         .setWeightCol("w")
         .fit(assembled.filter(!$"holdout"))
-    })
+    }
   }
 
-  /** The q_linkpred_ann_e2e oracle SQL, set by Verify via
-    * prepareLinkpredAnnOracle before the dump; absent (rows-only) until
-    * then. */
-  @volatile private var lpAnnOracle: Option[String] = None
-
-  def linkpredAnnOracleSqlEntry: Map[String, String] =
-    lpAnnOracle.map("q_linkpred_ann_e2e" -> _).toMap
-
-  def prepareLinkpredAnnOracle(s: SparkSession, dir: String): Unit = {
-    lpAnnOracle = None // a failed prepare must fall back to rows-only
-    val model = lpAnnModels.get((s, dir)).getOrElse {
-      val a = lpAnnAssembled(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try lpAnnModelFor(s, dir, a)
-      finally a.unpersist(blocking = false)
-    }
-    lpAnnOracle = Some(graft.XxhReplaySql.linkpredAnnE2eSql(
+  /** The q_linkpred_ann_e2e oracle: the memoized fit's coefficients
+    * embedded in the scoring replay. A cold fit persists its own
+    * assembled frame for the L-BFGS passes. */
+  def prepareLinkpredAnnOracle(s: SparkSession, dir: String): Option[String] = {
+    var assembled: Option[DataFrame] = None
+    val model =
+      try lpAnnModelFor(s, dir, {
+        assembled = Some(lpAnnAssembled(s, dir)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        assembled.get
+      })
+      finally assembled.foreach(_.unpersist(blocking = false))
+    Some(graft.XxhReplaySql.linkpredAnnE2eSql(
       model.coefficients.toArray, model.intercept))
   }
 

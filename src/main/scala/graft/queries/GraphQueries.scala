@@ -34,16 +34,14 @@ object GraphQueries {
     * in-bench (measured: quotient PageRank 35.7 s with per-query
     * derivation vs the direct form's 26.6 s — the loop savings were
     * eaten by re-derivation). */
-  private val eqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
   private def quotientEdges(s: SparkSession, dir: String): DataFrame =
-    eqCache.getOrElseUpdate((s, dir), {
+    graft.Caches.memo(s, ("quotientEdges", dir)) {
       import s.implicits._
       val reps = TextAnalysis.twinClasses(s, dir).select($"rep")
       graft.Caches.pin(pairGraph(s, dir)
         .join(reps.withColumnRenamed("rep", "a_id"), Seq("a_id"), "left_semi")
         .join(reps.withColumnRenamed("rep", "b_id"), Seq("b_id"), "left_semi"))
-    })
+    }
 
   /** Degree of each document in the near-dup pair graph. */
   def pairDegrees(s: SparkSession, dir: String): DataFrame = {
@@ -128,10 +126,8 @@ object GraphQueries {
     * cross edge) label themselves; edgeless classes are absent, as in
     * the direct form. The unchanged q_dedup_clusters member-level
     * oracle bit-matches — the per-round proof. */
-  private val ccCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
   private def components(s: SparkSession, dir: String): DataFrame =
-    ccCache.getOrElseUpdate((s, dir), {
+    graft.Caches.memo(s, ("components", dir)) {
       import s.implicits._
       val cls = TextAnalysis.twinClasses(s, dir)
       val ccQ = graft.operators.Graph.connectedComponents(
@@ -143,18 +139,7 @@ object GraphQueries {
       graft.Caches.pin(TextAnalysis.twinMembers(s, dir)
         .join(nodeCls, "rep")
         .select($"doc_id".as("id"), $"component"))
-    })
-
-  /** Drop this session's materialized components — same contract as
-    * TextAnalysis.invalidateCache (stale-on-rewrite, long-lived JVMs). */
-  def invalidateCache(s: SparkSession): Unit = {
-    ccCache.keys.filter(_._1 eq s).foreach { k =>
-      ccCache.remove(k).foreach(_.unpersist(blocking = false))
     }
-    eqCache.keys.filter(_._1 eq s).foreach { k =>
-      eqCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-  }
 
   /** Near-dup clusters: (doc_id, component) with component = min doc_id
     * reachable through near-dup pairs. */

@@ -645,11 +645,6 @@ object TextAnalysis {
     * from the pair frame it decomposes. */
   val NearDupMaxDf = 10000
 
-  private val nearDupCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val pairCountsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   /** The lowest containment threshold the session frame supports —
     * `containmentPairs` routes through the frame only for thresholds at
     * or above this floor (the declared query's 0.4 qualifies; anything
@@ -680,7 +675,7 @@ object TextAnalysis {
     * while still serving every declared consumer. Pinned via Caches.pin
     * (eager localCheckpoint, the r17 lineage-cut discipline). */
   def pairCountsFrame(s: SparkSession, dir: String): DataFrame =
-    pairCountsCache.getOrElseUpdate((s, dir), {
+    graft.Caches.memo(s, ("pairCounts", dir)) {
       import s.implicits._
       val jac = $"inter".cast("double") /
         ($"a_n" + $"b_n" - $"inter").cast("double")
@@ -691,7 +686,7 @@ object TextAnalysis {
         postingPairCounts(shingleTokens(s, dir), maxDf = NearDupMaxDf)
           .filter(jac >= BaseNearDupThreshold ||
             contMax >= FrameContainmentFloor))
-    })
+    }
 
   /** Session-scoped materialized intermediate: n-gram Jaccard pairs at the
     * base threshold, persisted on first use. Five queries consume this
@@ -707,7 +702,7 @@ object TextAnalysis {
     * ngramJaccardPairsOn plan computes, evaluated over the pinned counts
     * — rows bit-equal, one posting join total across the family. */
   def scoredNearDupPairs(s: SparkSession, dir: String): DataFrame =
-    nearDupCache.getOrElseUpdate((s, dir), {
+    graft.Caches.memo(s, ("nearDupPairs", dir)) {
       import s.implicits._
       graft.Caches.pin(
         pairCountsFrame(s, dir)
@@ -715,31 +710,7 @@ object TextAnalysis {
             ($"inter".cast("double") /
               ($"a_n" + $"b_n" - $"inter").cast("double")).as("jaccard"))
           .filter($"jaccard" >= BaseNearDupThreshold))
-    })
-
-  /** Drop this session's materialized pair frames — call when a `dir` is
-    * rewritten in place (the cache would serve stale pairs) or at session
-    * teardown in a long-lived multi-session JVM (entries otherwise pin
-    * the session object and its cached blocks; the harness mains are
-    * one-session-per-JVM, so they never need this). Sibling:
-    * GraphQueries.invalidateCache. */
-  def invalidateCache(s: SparkSession): Unit = {
-    pairCountsCache.keys.filter(_._1 eq s).foreach { k =>
-      pairCountsCache.remove(k).foreach(_.unpersist(blocking = false))
     }
-    nearDupCache.keys.filter(_._1 eq s).foreach { k =>
-      nearDupCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-    winnowCache.keys.filter(_._1 eq s).foreach { k =>
-      winnowCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-    twinClassCache.keys.filter(_._1 eq s).foreach { k =>
-      twinClassCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-    twinMemberCache.keys.filter(_._1 eq s).foreach { k =>
-      twinMemberCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-  }
 
   /** Token arrays for the shingle path, materialized BEHIND an exchange.
     * Without the barrier, CollapseProject inlines `t = split(text)` into
@@ -939,17 +910,12 @@ object TextAnalysis {
     cross.unionByName(intra)
   }
 
-  private val twinClassCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val twinMemberCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   /** Class membership (rep, doc_id) of the twinClasses quotient — the
     * expansion side, for quotient-form graph analytics that emit
     * PER-DOCUMENT rows (GraphQueries.pairPagerankFixed). Same keying
     * pass as twinClasses, session-cached. */
   def twinMembers(s: SparkSession, dir: String): DataFrame =
-    twinMemberCache.getOrElseUpdate((s, dir), {
+    graft.Caches.memo(s, ("twinMembers", dir)) {
       import s.implicits._
       val d = shingleFrame(shingleTokens(s, dir))
       val w = org.apache.spark.sql.expressions.Window
@@ -958,7 +924,7 @@ object TextAnalysis {
         d.withColumn("key", array_sort($"sh"))
           .withColumn("rep", min($"doc_id").over(w))
           .select($"rep", $"doc_id"))
-    })
+    }
 
   /** Twin classes of the near-dup pair universe: one row per class of
     * documents with IDENTICAL (lang, distinct-shingle-set) content —
@@ -972,7 +938,7 @@ object TextAnalysis {
     * expansion (GraphQueries.pairTriangles). Session-cached: the class
     * pass costs one shingle shuffle over the corpus. */
   def twinClasses(s: SparkSession, dir: String): DataFrame =
-    twinClassCache.getOrElseUpdate((s, dir), {
+    graft.Caches.memo(s, ("twinClasses", dir)) {
       import s.implicits._
       val d = shingleFrame(shingleTokens(s, dir))
       val w = org.apache.spark.sql.expressions.Window
@@ -997,7 +963,7 @@ object TextAnalysis {
           .join(surv, Seq("rep"), "left_outer")
           .select($"rep", $"lang", $"csize",
             coalesce($"survived", lit(false)).as("survived")))
-    })
+    }
 
   def ngramJaccardPairsOn(tokens: DataFrame, threshold: Double,
       maxDf: Int): DataFrame = {
@@ -1719,17 +1685,17 @@ object TextAnalysis {
     * documents the scale shape), then distributed tokenization. 200
     * merges ≈ the corpus's whole productive pair mass at sf0.1 (the
     * vocabulary is small word salad); a production run would use 32k+. */
-  private val bpeModels = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.Bpe.Model]
+  private def bpeModel(s: SparkSession, dir: String): graft.operators.Bpe.Model =
+    graft.Caches.memo(s, ("bpeModel", dir))(
+      graft.operators.Bpe.learn(Tables.documents(s, dir), "text",
+        vocabSize = 200))
 
   private def bpeTokenized(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     // session-memoized model (same pattern as Embeddings' shared exact
     // pair frame): learning is deterministic, so the two q_bpe_* queries
     // share one histogram pass instead of re-learning per query
-    val model = bpeModels.getOrElseUpdate((s, dir),
-      graft.operators.Bpe.learn(docs, "text", vocabSize = 200))
-    graft.operators.Bpe.tokenize(docs, "text", "doc_id", model)
+    graft.operators.Bpe.tokenize(docs, "text", "doc_id", bpeModel(s, dir))
   }
 
   /** ORACLE-checked BPE gate (q_bpe_roundtrip): detokenizing the learned
@@ -1780,31 +1746,13 @@ object TextAnalysis {
       .orderBy($"source")
   }
 
-  /** The q_bpe_tokens oracle SQL, set by Verify via prepareBpeOracle
-    * BEFORE the oracle dump (the SQL embeds corpus-learned state, so it
-    * cannot be a static literal like every other entry). Absent — e.g.
-    * when Verify's pre-learn failed or never ran — the query falls back
-    * to the pre-r12 rows-only status. */
-  @volatile private var bpeOracle: Option[String] = None
-
-  def bpeOracleSqlEntry: Map[String, String] =
-    bpeOracle.map("q_bpe_tokens" -> _).toMap
-
-  /** Learn (or reuse the session-memoized) BPE model for `dir` and build
-    * the replay oracle. Deterministic: Bpe.learn is a pure function of
-    * the corpus, so the ranks Verify embeds are exactly the ranks the
-    * q_bpe_tokens run will use (the bpeModels memo shares the instance). */
-  def prepareBpeOracle(s: SparkSession, dir: String): Unit = {
-    // Clear first: if learn/build throws below, a previous corpus's
-    // oracle must not survive in this global — Verify catches and
-    // continues, and a stale entry would dump a wrong-corpus oracle
-    // instead of the documented rows-only fallback.
-    bpeOracle = None
-    val model = bpeModels.getOrElseUpdate((s, dir),
-      graft.operators.Bpe.learn(Tables.documents(s, dir), "text",
-        vocabSize = 200))
-    bpeOracle = buildBpeOracleSql(model)
-  }
+  /** The q_bpe_tokens oracle from the session-memoized model (the SQL
+    * embeds corpus-learned state, so it cannot be a static literal).
+    * Deterministic: Bpe.learn is a pure function of the corpus, and the
+    * query runs share the memoized instance, so the embedded ranks are
+    * exactly the ranks q_bpe_tokens uses. */
+  def prepareBpeOracle(s: SparkSession, dir: String): Option[String] =
+    buildBpeOracleSql(bpeModel(s, dir))
 
   /** The DuckDB replay: a recursive CTE applies the greedy
     * lowest-rank-first (leftmost on equal rank — ranks are unique by
@@ -1987,19 +1935,15 @@ object TextAnalysis {
       .select($"doc_id", $"f").distinct()
   }
 
-  private val winnowCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Int), DataFrame]
-
   /** Session-scoped materialized winnow fingerprint frame (the same
     * shared-CTE pattern as scoredNearDupPairs): three queries consume it
     * (q_winnow, q_winnow_pairs, q_winnow_dedup) and the shingle explode
     * + window min that produces it dominates their cost. One slim row
-    * per (doc, fingerprint) — ~2/(w+1) of the span count. Dropped by
-    * invalidateCache alongside the pair frame. */
+    * per (doc, fingerprint) — ~2/(w+1) of the span count. */
   private def winnowFrame(s: SparkSession, dir: String, k: Int,
       w: Int): DataFrame = {
     import s.implicits._
-    winnowCache.getOrElseUpdate((s, dir, k, w),
+    graft.Caches.memo(s, ("winnow", dir, k, w))(
       graft.Caches.pin(winnowFingerprintsOn(
         Tables.documents(s, dir).select($"doc_id", toks($"text").as("t")),
         k, w)))

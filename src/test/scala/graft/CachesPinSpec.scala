@@ -4,7 +4,8 @@ import org.apache.spark.sql.execution.ExternalRDD
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
-/** Caches.pin — the lineage-cut contract behind every session-scoped
+/** Caches.memo — one build per (session, key), retried after a failure —
+  * and Caches.pin — the lineage-cut contract behind every session-scoped
   * materialized frame (SCALE_r17 §6: a persist()'d shared frame pins
   * its whole production pipeline's shuffle files on disk for the
   * cache's lifetime; the sfp100 full suite died on the accumulated
@@ -40,5 +41,41 @@ class CachesPinSpec extends SparkSpec {
     val phys = pinned.queryExecution.executedPlan.toString()
     assert(!phys.contains("Exchange"),
       s"pinned frame's physical plan still shuffles:\n$phys")
+  }
+
+  test("memo builds a key once even when two threads race for it") {
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val key = ("memoRace", System.nanoTime())
+    // the build holds until both threads are at the memo call, then
+    // sleeps so the second one asks while the first is still building
+    val ready = new java.util.concurrent.CountDownLatch(2)
+    def build: Int = {
+      builds.incrementAndGet()
+      ready.await(10, java.util.concurrent.TimeUnit.SECONDS)
+      Thread.sleep(300)
+      42
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val calls = (1 to 2).map(_ => pool.submit(
+        new java.util.concurrent.Callable[Int] {
+          def call(): Int = { ready.countDown(); Caches.memo(spark, key)(build) }
+        }))
+      assert(calls.map(_.get(30, java.util.concurrent.TimeUnit.SECONDS)) ===
+        Seq(42, 42))
+    } finally pool.shutdownNow()
+    assert(builds.get() === 1)
+    assert(Caches.memo(spark, key)(build) === 42)
+    assert(builds.get() === 1)
+  }
+
+  test("memo stores nothing for a build that throws: the next call " +
+      "builds again") {
+    val key = ("memoRetry", System.nanoTime())
+    intercept[IllegalStateException] {
+      Caches.memo[Int](spark, key)(throw new IllegalStateException("boom"))
+    }
+    assert(Caches.memo(spark, key)(7) === 7)
+    assert(Caches.memo(spark, key)(8) === 7)
   }
 }

@@ -10,6 +10,20 @@ class QueriesSpec extends SparkSpec {
 
   test("every oracleSql key has a matching queries entry") {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+    // fitted oracles name registered queries and never shadow a static one
+    assert(SparkEntry.fittedOracles.keySet.subsetOf(SparkEntry.queries.keySet))
+    assert(SparkEntry.fittedOracles.keySet.intersect(
+      SparkEntry.oracleSql.keySet).isEmpty)
+  }
+
+  test("Verify.oracleEntries turns a failed fitted prepare into an " +
+      "entry that raises in DuckDB, leaving the static entries as they are") {
+    val entries = Verify.oracleEntries(spark, "/nonexistent/graft-sf")
+    SparkEntry.fittedOracles.keys.foreach { name =>
+      assert(entries.get(name).exists(
+        _.startsWith("SELECT error('oracle prepare failed: ")), name)
+    }
+    assert(entries -- SparkEntry.fittedOracles.keys === SparkEntry.oracleSql)
   }
 
   test("flagship entry returns rows") {
@@ -49,6 +63,12 @@ class QueriesSpec extends SparkSpec {
     // (PlanShapeSpec pins that the token pass sits inside the cached
     // frame and never feeds a join). Everything else must be an
     // equi-join.
+    // the registry is the run order; a name declared twice would
+    // silently collapse to its last entry in the map
+    val names = SparkEntry.registry.map(_._1)
+    assert(names.distinct === names,
+      s"declared twice: ${names.diff(names.distinct).mkString(", ")}")
+    assert(SparkEntry.orderedQueryNames === names)
     val sanctioned = Set("q_cosine_topk", "q_pq_topk", "q_pq_recall",
       "q_ivfpq_recall", "q_sketch_overlap")
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1)

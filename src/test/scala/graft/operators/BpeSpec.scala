@@ -115,11 +115,12 @@ class BpeSpec extends SparkSpec {
     assert(TextAnalysis.buildBpeOracleSql(Model(Nil)).isEmpty)
     assert(TextAnalysis
       .buildBpeOracleSql(Model(Seq(Merge("a\u001f", "b", 0)))).isEmpty)
-    // prepareBpeOracle exposes the entry under the query's name
-    TextAnalysis.prepareBpeOracle(spark, sf("sf0.001"))
-    val entry = TextAnalysis.bpeOracleSqlEntry
-    assert(entry.keySet === Set("q_bpe_tokens"))
-    assert(entry("q_bpe_tokens").contains("WITH RECURSIVE"))
+    // prepareBpeOracle is the fitted oracle registered under the query's
+    // name, and it reuses the memoized model (same SQL on a second call)
+    val entry = TextAnalysis.prepareBpeOracle(spark, sf("sf0.001"))
+    assert(graft.SparkEntry.fittedOracles("q_bpe_tokens")(
+      spark, sf("sf0.001")) === entry)
+    assert(entry.exists(_.contains("WITH RECURSIVE")))
   }
 
   test("initialSymbols iterates codepoints: one symbol per astral char") {

@@ -115,6 +115,19 @@ class DupProbeSpec extends SparkSpec {
     assert(jobs >= 2,
       s"invalidate must force both probes to re-scan (jobs=$jobs)")
   }
+
+  test("Caches.invalidate drops the learned BPE model: q_bpe_tokens " +
+      "relearns instead of reusing the old corpus's merges") {
+    val dir = sf("sf0.001")
+    graft.queries.TextAnalysis.bpeTokens(spark, dir) // learns the model
+    // a warm call still runs the parquet schema-inference jobs of its
+    // table reads; relearning the model adds the histogram pass on top
+    val warm = jobsDuring { graft.queries.TextAnalysis.bpeTokens(spark, dir) }
+    graft.Caches.invalidate(spark)
+    val jobs = jobsDuring { graft.queries.TextAnalysis.bpeTokens(spark, dir) }
+    assert(jobs > warm,
+      s"invalidate must force the model to relearn (jobs=$jobs, warm=$warm)")
+  }
 }
 
 object DupProbeSpec {
