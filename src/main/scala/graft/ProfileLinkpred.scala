@@ -75,12 +75,10 @@ object ProfileLinkpred {
         ml.LinkPredictor.featureCols.map(col): _*)._1
     }
     val assembled = ml.LinkPredictor.assemble(feat)
-    val model = new org.apache.spark.ml.classification.LogisticRegression()
-      .setMaxIter(5).setFeaturesCol("features").setLabelCol("label")
-      .fit(ml.LinkPredictor.assemble(
-        ml.LinkPredictor.featurize(ml.LinkPredictor.attachNodeAttrs(
-          pairs.filter(($"a_id" + $"b_id") % 3 =!= 0)
-            .select($"srcId", $"dstId", $"label"), prepared))).cache())
+    val model = ml.LinkPredictor.train(
+      ml.LinkPredictor.featurize(ml.LinkPredictor.attachNodeAttrs(
+        pairs.filter(($"a_id" + $"b_id") % 3 =!= 0)
+          .select($"srcId", $"dstId", $"label"), prepared)), maxIter = 5)
     stage("+ assemble+transform+p1 (valued)") {
       ProfileValued.timeValued(
         ml.LinkPredictor.score(model, assembled), col("p1"))._1

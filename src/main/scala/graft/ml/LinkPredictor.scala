@@ -3,6 +3,8 @@ package graft.ml
 import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -89,26 +91,33 @@ object LinkPredictor {
     * treeAggregate job per iteration, and without persistence every
     * iteration re-executes the whole featurization lineage (the
     * reference's no-cache mistake, SURVEY.md §3.2 stage 8 — measured
-    * ~10× end-to-end on the e2e query). */
-  def train(featurized: DataFrame, maxIter: Int = 100)
-      : (LogisticRegressionModel, DataFrame) = {
+    * ~10× end-to-end on the e2e query). The cache is built at the
+    * featurized frame's width; with `fitPartitions` the fit reads it
+    * coalesced to that many partitions, so each L-BFGS job runs that
+    * many tasks. The cache is released before returning, also when the
+    * fit throws. */
+  def train(featurized: DataFrame, maxIter: Int = 100,
+      fitPartitions: Option[Int] = None): LogisticRegressionModel = {
     val assembled = assemble(featurized).cache()
     try {
-      val lr = new LogisticRegression()
+      new LogisticRegression()
         .setMaxIter(maxIter)
         .setFeaturesCol("features")
         .setLabelCol("label")
-      val model = lr.fit(assembled)
-      (model, assembled)
+        .fit(fitPartitions.fold(assembled)(assembled.coalesce))
     } finally assembled.unpersist(blocking = false)
   }
 
+  /** One assembler for every call. A transformer's uid ends up in the
+    * struct field names of the generated code (`year_diff_double_<uid>`),
+    * so a fresh random uid per call compiled new classes on every run. */
+  private val assembler = new VectorAssembler("vecAssembler_linkPredictor")
+    .setInputCols(featureCols)
+    .setOutputCol("features")
+    .setHandleInvalid("skip")
+
   def assemble(featurized: DataFrame): DataFrame =
-    new VectorAssembler()
-      .setInputCols(featureCols)
-      .setOutputCol("features")
-      .setHandleInvalid("skip")
-      .transform(featurized.withColumn("label", col("label").cast("double")))
+    assembler.transform(featurized.withColumn("label", col("label").cast("double")))
 
   /** P(label=1) from the model's probability vector, as a column. */
   def score(model: LogisticRegressionModel, assembled: DataFrame): DataFrame = {
@@ -150,43 +159,76 @@ object LinkPredictor {
       .orderBy(col("threshold").desc)
   }
 
+  /** The partition count `df` runs at, read from its physical plan
+    * without launching a job. None when the plan holds an exchange (with
+    * AQE on, an adaptive root, which a scan of a cached frame whose plan
+    * holds one gets too; its final width only its run decides) or a
+    * subquery (preparing the plan would run it). */
+  private[ml] def planPartitions(df: DataFrame): Option[Int] = {
+    val plan = df.queryExecution.executedPlan
+    val undecided = plan.exists {
+      case _: AdaptiveSparkPlanExec | _: Exchange => true
+      case p => p.subqueries.nonEmpty
+    }
+    if (undecided) None else Some(plan.execute().getNumPartitions)
+  }
+
   /** End-to-end p1: train on labeled edges, score candidate edges,
     * return (model, scored candidates, metrics vs ground truth).
     * `cachedModel` skips the fit entirely (the session-memoized-state
     * device, r15): Extended.linkpredE2e trains once per (session,
     * corpus) so its coefficient-embed replay oracle scores with the
-    * SAME coefficients the query does. */
+    * SAME coefficients the query does.
+    *
+    * Width rule: a training edge list whose plan reads fewer partitions
+    * than `defaultParallelism` (a one-split file, say) is spread
+    * round-robin to `defaultParallelism` partitions, so the attach joins,
+    * featurization and assembly use every core; the fit then reads that
+    * cache coalesced back to the input's own partition count, where each
+    * L-BFGS iteration stays one small job of that many tasks (a fit at
+    * full width kept less than half of the gain: every iteration then
+    * launches `defaultParallelism` tiny tasks). An input already that
+    * wide, with no partitions, or whose width its plan leaves open is
+    * used as it is. The candidate side is never spread.
+    *
+    * The node cache is released before returning, also when the fit or
+    * the scoring throws; the returned scored frame stays cached. */
   def run(spark: SparkSession, nodes: DataFrame, trainEdges: DataFrame,
       candidateEdges: DataFrame, groundTruth: DataFrame,
       maxIter: Int = 100,
       cachedModel: Option[LogisticRegressionModel] = None)
       : (LogisticRegressionModel, DataFrame, DataFrame) = {
     val prepared = prepareNodes(nodes).cache()
-    val model = cachedModel.getOrElse {
-      val trainFeat = featurize(attachNodeAttrs(trainEdges, prepared))
-      train(trainFeat, maxIter)._1
-    }
-    // J3: left-outer membership probe labels the candidates (Q3: directed).
-    // dropDuplicates: it is a MEMBERSHIP probe — a ground-truth dump
-    // listing an edge twice would otherwise fan each matching candidate
-    // into duplicate scored rows and double-count it in the metrics.
-    val gt = groundTruth
-      .select(col("srcId").as("g_src"), col("dstId").as("g_dst"))
-      .dropDuplicates()
-    val labeled = candidateEdges
-      .join(gt, col("srcId") === col("g_src") && col("dstId") === col("g_dst"),
-        "left_outer")
-      .withColumn("label", when(col("g_src").isNull, 0).otherwise(1))
-      .drop("g_src", "g_dst")
-    val scored = score(model,
-      assemble(featurize(attachNodeAttrs(labeled, prepared)))).cache()
-    scored.count()        // materialize before dropping the node cache
-    prepared.unpersist()
-    // sweep on probabilities bucketed to 3 decimals: raw p1 is distinct
-    // per candidate, and sweepMetrics' global cumsum window would pull
-    // every candidate into ONE task (the bound Extended.linkpredE2e
-    // applies for the same reason); ≤1001 buckets keeps it tiny
-    (model, scored,
-      sweepMetrics(scored.withColumn("p1r", round(col("p1"), 3)), "p1r"))
+    try {
+      val model = cachedModel.getOrElse {
+        val width = spark.sparkContext.defaultParallelism
+        val narrow = planPartitions(trainEdges).filter(n => n > 0 && n < width)
+        val edges = if (narrow.isDefined) trainEdges.repartition(width) else trainEdges
+        train(featurize(attachNodeAttrs(edges, prepared)), maxIter, narrow)
+      }
+      // J3: left-outer membership probe labels the candidates (Q3: directed).
+      // dropDuplicates: it is a MEMBERSHIP probe — a ground-truth dump
+      // listing an edge twice would otherwise fan each matching candidate
+      // into duplicate scored rows and double-count it in the metrics.
+      val gt = groundTruth
+        .select(col("srcId").as("g_src"), col("dstId").as("g_dst"))
+        .dropDuplicates()
+      val labeled = candidateEdges
+        .join(gt, col("srcId") === col("g_src") && col("dstId") === col("g_dst"),
+          "left_outer")
+        .withColumn("label", when(col("g_src").isNull, 0).otherwise(1))
+        .drop("g_src", "g_dst")
+      val scored = score(model,
+        assemble(featurize(attachNodeAttrs(labeled, prepared)))).cache()
+      // materialize before the node cache is dropped
+      try scored.count()
+      catch { case e: Throwable => scored.unpersist(); throw e }
+      // sweep on probabilities bucketed to 3 decimals: raw p1 is distinct
+      // per candidate, and sweepMetrics' global cumsum window would pull
+      // every candidate into ONE task (the bound Extended.linkpredE2e
+      // applies for the same reason); ≤1001 buckets keeps it tiny
+      (model, scored,
+        sweepMetrics(scored.withColumn("p1r", round(col("p1"), 3)), "p1r"))
+    } finally prepared.unpersist()
   }
 }

@@ -23,7 +23,10 @@ object P1Files {
     * failed the ANSI-safe parse (malformed lines → null, Tables
     * .labeledEdges) — BOTH label values are kept: LR needs positives and
     * negatives, and the labeled training file itself carries supervision
-    * (reference :158-167). */
+    * (reference :158-167). A training file that reads as fewer splits
+    * than `defaultParallelism` is featurized on every core and fitted at
+    * its own split count (LinkPredictor.run's width rule); the candidate
+    * side runs at the width its files read as. */
   def run(spark: SparkSession, nodeCsvPath: String, trainingPath: String,
       testingPath: String, groundTruthPath: String,
       maxIter: Int = 100): (DataFrame, DataFrame) = {

@@ -9,6 +9,18 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(name: String) = s"/root/testdata/$name"
+
+  /** Runs `body` with `listener` registered, and returns only once the
+    * listener has seen every event `body` caused. */
+  def withListener[T](listener: org.apache.spark.scheduler.SparkListener)(
+      body: => T): T = {
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext)
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

@@ -16,7 +16,12 @@ class P1FilesSpec extends SparkSpec {
   private val t1 = "quantum gravity entanglement duality holographic boundary"
   private val t2 = "supersymmetry breaking gauge mediation soft terms"
 
-  test("P1Files.run replays p1 from reference-format files") {
+  private val cand = Seq((10, 12), (11, 13), (12, 14), (13, 15),
+    (10, 11), (11, 12), (12, 13), (13, 14))
+  private val gt = Seq((10, 12), (11, 13), (12, 14), (13, 15))
+
+  /** Writes the four reference-format files; returns their directory. */
+  private def writeFiles(): java.io.File = {
     val dir = Files.createTempDirectory("p1files").toFile
     dir.deleteOnExit()
 
@@ -40,25 +45,61 @@ class P1FilesSpec extends SparkSpec {
       (trainPos ++ trainNeg).mkString("\n"))
 
     // A3: space-delimited srcId dstId
-    val cand = Seq((10, 12), (11, 13), (12, 14), (13, 15),
-      (10, 11), (11, 12), (12, 13), (13, 14))
     Files.writeString(new java.io.File(dir, "testing.txt").toPath,
       cand.map { case (a, b) => s"p$a p$b" }.mkString("\n"))
 
     // A4: tab-delimited with SNAP '#' comment headers
-    val gt = Seq((10, 12), (11, 13), (12, 14), (13, 15))
     Files.writeString(new java.io.File(dir, "gt.txt").toPath,
       ("# Directed graph" +: "# FromNodeId\tToNodeId" +:
         gt.map { case (a, b) => s"p$a\tp$b" }).mkString("\n"))
+    dir
+  }
 
-    val (scored, metrics) = P1Files.run(spark,
-      s"$dir/nodes.csv", s"$dir/training.txt", s"$dir/testing.txt",
-      s"$dir/gt.txt", maxIter = 50)
+  private def runOn(dir: java.io.File) = P1Files.run(spark,
+    s"$dir/nodes.csv", s"$dir/training.txt", s"$dir/testing.txt",
+    s"$dir/gt.txt", maxIter = 50)
+
+  test("P1Files.run replays p1 from reference-format files") {
+    val (scored, metrics) = runOn(writeFiles())
     val rows = scored.select(col("srcId"), col("label"), col("p1")).collect()
     assert(rows.length === cand.length)
     // ground-truth labels survived the file round-trip (incl. # filtering)
     assert(scored.filter(col("label") === 1).count() === gt.length)
     val bestF1 = metrics.agg(max(col("f1"))).head.getDouble(0)
     assert(bestF1 === 1.0) // same separable fixture as LinkPredictorSpec
+  }
+
+  test("P1Files.run featurizes a one-split training file at full width " +
+      "and repeats bit for bit") {
+    val dir = writeFiles()
+    // every value of a row, doubles as their bits
+    def bits(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(
+      _.toSeq.map {
+        case d: Double => java.lang.Double.doubleToRawLongBits(d)
+        case v => v
+      })
+    def once() = {
+      val (scored, metrics) = runOn(dir)
+      val out = (bits(scored.select("srcId", "dstId", "p1")
+        .orderBy("srcId", "dstId")), bits(metrics))
+      scored.unpersist()
+      out
+    }
+    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+        stageTasks.add(e.stageInfo.numTasks); ()
+      }
+    }
+    val (scored1, metrics1) = withListener(listener)(once())
+    val width = spark.sparkContext.defaultParallelism
+    assert(stageTasks.contains(width),
+      s"no stage ran $width tasks: ${stageTasks.toArray.mkString(",")}")
+    val (scored2, metrics2) = once()
+    assert(scored1.length === cand.length)
+    assert(scored2 === scored1)
+    assert(metrics1.nonEmpty)
+    assert(metrics2 === metrics1)
   }
 }
