@@ -46,6 +46,7 @@ object Bench {
       // "partitions must scale with data" posture a real cluster runs.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         (cpus.toInt * 8).toString)
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

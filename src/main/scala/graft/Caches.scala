@@ -48,8 +48,10 @@ object Caches {
     * frame builds wrap their result in `pin`. A build that throws stores
     * nothing: the next call (or a caller that was waiting on it) builds
     * again. Memos assume the inputs are immutable for the life of the
-    * session: call `invalidate` after rewriting a dir in place. A build
-    * must not ask for its own key. */
+    * session: call `invalidate` after rewriting a dir in place. The
+    * exception is a memo whose key carries a fingerprint of its input
+    * files (`Tables.table`'s schema memo): a rewrite changes the key, so
+    * it needs no `invalidate`. A build must not ask for its own key. */
   def memo[V](s: SparkSession, key: Any)(build: => V): V = {
     val k = (s, key)
     val cell = cells.getOrElseUpdate(k, new Cell)

@@ -23,13 +23,25 @@ import graft.sources.Tables
   * shuffle-free layouts), and until now a regression in them was
   * invisible to the driver's per-round correctness gate.
   *
-  * Scratch space: each invocation replays into fresh
-  * `Files.createTempDirectory` roots (the same convention the streaming
-  * specs use) — the returned DataFrame lazily reads the final snapshot,
-  * so the directories must outlive the call and are left to the OS temp
-  * reaper rather than deleted under the reader.
+  * Scratch space: each invocation replays into fresh temp-dir roots
+  * (`tempDir`). The returned DataFrame lazily reads the final snapshot,
+  * so the roots must outlive the call; one JVM shutdown hook deletes
+  * them all, recursively, when the process exits.
   */
 object Storage {
+
+  private val tempRoots =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  sys.addShutdownHook {
+    tempRoots.forEach(root => org.apache.hadoop.fs.FileUtil.fullyDelete(root.toFile))
+  }
+
+  /** A fresh `Files.createTempDirectory` root, deleted at JVM exit. */
+  private def tempDir(prefix: String): String = {
+    val root = Files.createTempDirectory(prefix)
+    tempRoots.add(root)
+    root.toString
+  }
 
   /** Run `body` with `spark.sql.shuffle.partitions` sized from the
     * replay's ACTUAL row count instead of the session-wide core count
@@ -43,15 +55,21 @@ object Storage {
     * slice rows, capped at the session's parallelism, so a decade-scale
     * slice climbs back to the full width. Restored in finally; the value
     * is also pinned into each stream's checkpoint at first start, so a
-    * restarted drain keeps its partitioning regardless of session state. */
-  private def withReplayPartitions[T](s: SparkSession, rows: Long)(
-      body: => T): T = {
+    * restarted drain keeps its partitioning regardless of session state.
+    *
+    * `noDataBatches` sets `spark.sql.streaming.noDataMicroBatches.enabled`
+    * for the streams started in `body`, restored in the same finally. */
+  private def withReplayPartitions[T](s: SparkSession, rows: Long,
+      noDataBatches: Boolean = true)(body: => T): T = {
     val conf = s.conf
-    val prev = conf.get("spark.sql.shuffle.partitions")
     val target = math.max(1L, math.min(
       s.sparkContext.defaultParallelism.toLong, rows / 2000L))
-    conf.set("spark.sql.shuffle.partitions", target.toString)
-    try body finally conf.set("spark.sql.shuffle.partitions", prev)
+    val scoped = Seq(
+      "spark.sql.shuffle.partitions" -> target.toString,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString)
+    val prev = scoped.map { case (k, _) => k -> conf.get(k) }
+    scoped.foreach { case (k, v) => conf.set(k, v) }
+    try body finally prev.foreach { case (k, v) => conf.set(k, v) }
   }
 
   /** End-to-end CDC MERGE replay (streaming.CdcSink) with a DuckDB
@@ -87,10 +105,10 @@ object Storage {
     * breaks the hash compare. */
   def cdcState(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val root = Files.createTempDirectory("graft-cdc-state-").toString
-    val ckpt = Files.createTempDirectory("graft-cdc-state-ckpt-").toString
-    val land = Files.createTempDirectory("graft-cdc-state-land-").toString
-    val stage = Files.createTempDirectory("graft-cdc-state-stage-").toString
+    val root = tempDir("graft-cdc-state-")
+    val ckpt = tempDir("graft-cdc-state-ckpt-")
+    val land = tempDir("graft-cdc-state-land-")
+    val stage = tempDir("graft-cdc-state-stage-")
 
     graft.streaming.CdcSink.init(
       Tables.customer(s, dir).select(
@@ -269,9 +287,9 @@ object Storage {
     // state store (open sessions, watermark, timeout registrations)
     // survives a query restart: a session spanning the restart boundary
     // is only emitted whole if instance 2 recovered instance 1's state.
-    val land = Files.createTempDirectory("graft-sess-land-").toString
-    val ckpt = Files.createTempDirectory("graft-sess-ckpt-").toString
-    val out = Files.createTempDirectory("graft-sess-out-").toString
+    val land = tempDir("graft-sess-land-")
+    val ckpt = tempDir("graft-sess-ckpt-")
+    val out = tempDir("graft-sess-out-")
 
     // driver-side atomic publish: write hidden (source-ignored), then
     // rename into visibility — the file source never sees a half file.
@@ -333,6 +351,16 @@ object Storage {
       .orderBy($"user_id", $"start_us")
   }
 
+  private[graft] type DedupEvent = (Long, java.sql.Timestamp, String, Double)
+
+  /** The order `streamDedup` replays its slice in, applied on the driver
+    * to the collected slice: `orderBy(ts, event_id)` with Spark's default
+    * nulls-first, without a range sort across the cluster. */
+  private[graft] val replayOrder: Ordering[DedupEvent] =
+    Ordering.by((e: DedupEvent) => (Option(e._2), e._1))(Ordering.Tuple2(
+      Ordering.Option(Ordering.fromLessThan[java.sql.Timestamp](_ before _)),
+      Ordering.Long))
+
   /** Streaming exact-dedup evidence (streaming.EventStreams.dedupEvents
     * — dropDuplicatesWithinWatermark, the bounded-state dedup of an
     * at-least-once ingest): a 5 % event slice is replayed in two
@@ -345,19 +373,25 @@ object Storage {
     * are never late because batches are fed in ts order. The aggregate
     * over the survivors is recomputed by the oracle from the raw slice,
     * so a dedup that loses an original, passes a duplicate, or expires
-    * state too early breaks the hash compare. */
+    * state too early breaks the hash compare.
+    *
+    * The stream runs with no-data micro-batches off: the dedup emits
+    * every survivor in the data batch that brings it, so a batch that
+    * only advances the watermark and evicts state adds no output row, and
+    * the stream stops right after its second data batch. (The session
+    * replay above keeps them: its sessions are emitted on watermark
+    * advance.) */
   def streamDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = Tables.events(s, dir)
       .filter($"event_id" % 20 === 0)
       .select($"event_id", $"ts", $"event_type", $"value")
-      .orderBy($"ts", $"event_id")
-      .as[(Long, java.sql.Timestamp, String, Double)].collect()
+      .as[DedupEvent].collect().sorted(replayOrder)
     require(ev.nonEmpty, s"no events in the dedup slice for $dir")
     val name = s"graft_stream_dedup_${streamSessionsSeq.incrementAndGet()}"
-    val mem = MemoryStream[(Long, java.sql.Timestamp, String, Double)]
-    withReplayPartitions(s, ev.length.toLong) {
+    val mem = MemoryStream[DedupEvent]
+    withReplayPartitions(s, ev.length.toLong, noDataBatches = false) {
       val q = graft.streaming.EventStreams.dedupEvents(
           mem.toDF().toDF("event_id", "ts", "event_type", "value"))
         .writeStream.format("memory").queryName(name)
@@ -393,8 +427,8 @@ object Storage {
     * hash-compared bit-for-bit (doubles round-trip parquet exactly). */
   def mergeState(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val baseDir = Files.createTempDirectory("graft-merge-base-").toString
-    val dest = Files.createTempDirectory("graft-merge-dest-").toString + "/snap"
+    val baseDir = tempDir("graft-merge-base-")
+    val dest = tempDir("graft-merge-dest-") + "/snap"
 
     Tables.customer(s, dir)
       .select($"c_custkey".as("custkey"), $"c_mktsegment".as("segment"),
@@ -440,8 +474,8 @@ object Storage {
     * hash-checks it bit-for-bit. */
   def mergePartitionedState(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val baseDir = Files.createTempDirectory("graft-mergep-base-").toString + "/t"
-    val dest = Files.createTempDirectory("graft-mergep-dest-").toString + "/t"
+    val baseDir = tempDir("graft-mergep-base-") + "/t"
+    val dest = tempDir("graft-mergep-dest-") + "/t"
     Tables.customer(s, dir)
       .select($"c_custkey".as("custkey"), $"c_mktsegment".as("segment"),
         $"c_acctbal".as("bal"))
@@ -469,7 +503,7 @@ object Storage {
     * fails to merge footers breaks the hash compare. */
   def evolvedRead(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val table = Files.createTempDirectory("graft-evolve-").toString + "/t"
+    val table = tempDir("graft-evolve-") + "/t"
     Tables.customer(s, dir)
       .select($"c_custkey".as("custkey"), $"c_acctbal".as("bal"))
       .write.parquet(table)
@@ -508,7 +542,7 @@ object Storage {
     * per-file ranges, hence exactly which files an honest index keeps. */
   def zorderPrune(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tmp = Files.createTempDirectory("graft-zorder-").toString
+    val tmp = tempDir("graft-zorder-")
     val table = s"$tmp/table"
     val Z = graft.sources.ZOrder
     val bits = 4
@@ -565,7 +599,7 @@ object Storage {
     * this query into a driver-visible `err`, not a silent pass. */
   def compaction(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tmp = Files.createTempDirectory("graft-compact-").toString
+    val tmp = tempDir("graft-compact-")
     val (frag, dest) = (s"$tmp/frag", s"$tmp/compacted")
     Tables.lineitem(s, dir)
       .select($"l_orderkey", $"l_partkey", $"l_quantity")
@@ -613,7 +647,7 @@ object Storage {
     * key-sum through prunedRead) fails the hash compare. */
   def skippingPrune(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tmp = Files.createTempDirectory("graft-skip-").toString
+    val tmp = tempDir("graft-skip-")
     val table = s"$tmp/table"
     val li = Tables.lineitem(s, dir).select($"l_orderkey")
     val m = li.agg(max($"l_orderkey")).head.getLong(0) + 1L

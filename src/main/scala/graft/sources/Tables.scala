@@ -14,8 +14,49 @@ import org.apache.spark.sql.types._
   */
 object Tables {
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** `$dir/$name.parquet` as a lazy scan over a session-memoized schema.
+    * Inferring a parquet schema runs a Spark job that reads a footer, and
+    * every query builds its scans afresh on every call, so only the first
+    * read of an unchanged file pays that job: the inferred schema is kept
+    * in `Caches.memo` and handed back through `spark.read.schema`.
+    *
+    * The memo key is the path, a fingerprint of its files (name, length
+    * and mtime of the file, or of every leaf file under a directory) and
+    * the session's parquet read confs (`spark.sql.parquet.*`,
+    * `spark.sql.legacy.parquet.nanosAsLong`), which change the inferred
+    * types. A file rewritten in place thus gets a new key without
+    * `Caches.invalidate`. Only the schema is memoized, never the frame: a
+    * relation's file listing is fixed when the frame is built. A missing
+    * path falls through to the plain read and its usual error. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    fingerprint(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(files) =>
+        val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
+          k.startsWith("spark.sql.parquet.") ||
+            k == "spark.sql.legacy.parquet.nanosAsLong" }.sorted
+        val schema = graft.Caches.memo(spark,
+            ("parquetSchema", path, files, confs)) {
+          spark.read.parquet(path).schema
+        }
+        spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  /** (path, length, mtime) of every leaf file under `path`, or of `path`
+    * itself, sorted; None when it does not exist. */
+  private def fingerprint(spark: SparkSession,
+      path: String): Option[Seq[(String, Long, Long)]] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val it = fs.listFiles(p, true)
+      Some(Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        .toSeq.sorted)
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

@@ -15,6 +15,40 @@ class TablesSpec extends SparkSpec {
     f.toString
   }
 
+  private def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    withListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    })(body)
+    jobs.get
+  }
+
+  test("table memoizes the parquet schema: the first read of a file runs " +
+      "one job, a second read of the unchanged file none") {
+    val dir = Files.createTempDirectory("graft-schema-memo").toString
+    spark.range(3).toDF("k").coalesce(1).write.parquet(s"$dir/t.parquet")
+    assert(jobsDuring(Tables.table(spark, dir, "t")) === 1)
+    assert(jobsDuring(Tables.table(spark, dir, "t")) === 0)
+    assert(Tables.table(spark, dir, "t").count() === 3)
+  }
+
+  test("table reads a file rewritten in place with its new schema, " +
+      "without Caches.invalidate") {
+    val dir = Files.createTempDirectory("graft-schema-rewrite").toString
+    val path = s"$dir/t.parquet"
+    spark.range(3).toDF("k").coalesce(1).write.parquet(path)
+    assert(Tables.table(spark, dir, "t").columns.toSeq === Seq("k"))
+    spark.range(2).selectExpr("cast(id AS string) AS name", "id * 2 AS v")
+      .coalesce(1).write.mode("overwrite").parquet(path)
+    val t = Tables.table(spark, dir, "t")
+    assert(t.columns.toSeq === Seq("name", "v"))
+    assert(t.orderBy("v").collect().map(r => (r.getString(0), r.getLong(1)))
+      .toSeq === Seq(("0", 0L), ("1", 2L)))
+  }
+
   test("S1 nodeInfoCsv: headerless, quoted commas, explicit schema") {
     val p = tmpFile("nodes", Seq(
       """1001,1999,"Black Holes, Strings","A. Author,B. Author",JHEP,"an abstract, with comma"""",
