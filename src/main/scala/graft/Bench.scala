@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.{Callable, Executors, TimeUnit, TimeoutException}
 
 /** Throughput benchmark over SparkEntry.queries at SPARK_GRAFT_SF_DIR.
@@ -28,27 +27,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // contract: bench runs at local[32] — default to the machine's cores,
-    // capped, rather than a conservative 4 (the driver may not export
-    // SPARK_GRAFT_CPUS).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors(), 32).toString)
     val capSec = sys.env.getOrElse("SPARK_GRAFT_QUERY_CAP", "45").toLong
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "300").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Let AQE size shuffle parallelism from the DATA, not the static
-      // 32: big shuffles start at 8×cores partitions (so per-task sort/
-      // agg state stays inside execution memory at 10×+ SFs — the r8
-      // scale run's q_linkpred_e2e died exactly here) and AQE coalesces
-      // small ones back to ~cores by its advisory target. This is the
-      // "partitions must scale with data" posture a real cluster runs.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: touch every table and exercise codegen/shuffle
     // machinery once, so the first timed query doesn't absorb JVM/JIT/

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Write `.explain("formatted")` for a list of registered queries to
   * files — the plans/r17 before/after evidence (not part of the driver
   * contract). Usage:
@@ -13,13 +11,7 @@ object DumpPlans {
     val outDir = args(1)
     val suffix = args(2)
     val names = args(3).split(",").map(_.trim).filter(_.nonEmpty)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Seeded mixture-of-Gaussians embedding fixture (VERDICT r14 #5) — the
   * clustered arm for the PQ/IVF-PQ recall measurements. The driver
   * testdata embeddings are uniform random, the information-theoretic
@@ -30,9 +28,7 @@ object MakeClustered {
     val centers = args.lift(2).map(_.toInt).getOrElse(32)
     val sigma = args.lift(3).map(_.toDouble).getOrElse(0.25)
     val dim = args.lift(4).map(_.toInt).getOrElse(64)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.builder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Offline stage-by-stage profile of the native similarity self-join
@@ -11,13 +10,7 @@ import org.apache.spark.sql.functions._
   */
 object ProfileP2 {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")

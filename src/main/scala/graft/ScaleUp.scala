@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-experiment data generator (VERDICT r7 #5): replicate an sf dir
@@ -49,9 +49,7 @@ object ScaleUp {
     //    from a boundary is unchanged), while cross-copy cosines are
     //    ~N(0, 1/√64) pseudo-random — distinct content, dup factor ≈ 1.
     val perturb = flags.contains("--perturb")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

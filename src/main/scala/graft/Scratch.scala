@@ -1,18 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc profiling entry point (not part of the driver contract). */
 object Scratch {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // AQE sizes big shuffles from the data (see Bench's note)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val name = if (args.length > 1) args(1) else "q_ngram_jaccard"

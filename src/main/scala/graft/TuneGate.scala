@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Throwaway: measure the sampled lshRecall gate (r8 #6) — sampled pair
   * counts and missed-pair counts per degraded nTables. */
 object TuneGate {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.builder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     for (f <- Seq(1.0, 0.5, 0.7); nt <- Seq(48, 8, 4, 2, 1)) {

@@ -86,10 +86,8 @@ object TuneHeavyTailText {
   def main(args: Array[String]): Unit = {
     val total = args.headOption.map(_.toLong).getOrElse(20000000L)
     val outRoot = args.drop(1).headOption.getOrElse("target/heavytail")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.driver.maxResultSize", "4g")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.builder(Sessions.cpus)
+      .config("spark.driver.maxResultSize", "4g").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val uniform = Array.fill((total / 200L).toInt)(200)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** IVF-PQ probe sweep — decomposes the tier's shortlist-recall loss
@@ -38,9 +37,7 @@ object TuneIvfPq {
       else Seq("/root/testdata/sf0.1")
     val probes = sys.env.getOrElse("TUNEIVFPQ_PROBES", "4,8,16")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.builder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     for (dir <- dirs) {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Adversarial-distribution arm for the graph family (VERDICT r15 #7):
@@ -33,9 +33,7 @@ object TunePowerLawGraph {
     val cpus = if (args.length > 2) args(2).toInt else 16
     val ops = if (args.length > 3) args(3).split(",").toSet
       else Set("degrees", "cc", "kcore", "pagerank", "triangles")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

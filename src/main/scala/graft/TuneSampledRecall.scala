@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measure the q_lsh_recall sampled-gate PRODUCTION posture (VERDICT
@@ -41,9 +41,7 @@ object TuneSampledRecall {
     val approxBudget = if (args.length > 3) args(3).toLong
       else operators.Ann.MaxLshCandidateEstimate
     val exactOnly = approxBudget == 0L
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Throwaway: phase-level timing of semanticDedup at the 10× scale dir
@@ -8,9 +7,7 @@ import org.apache.spark.sql.functions._
   * or components?). */
 object TuneScale {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.builder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val dir = args.headOption.getOrElse("/root/repo/target/sf1.0")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Throwaway measurement harness for SemDeDup probe strategies (r8 #4):
@@ -10,9 +9,7 @@ import org.apache.spark.sql.functions._
   * centroids, mirroring SemanticDedupSpec's recompute. */
 object TuneSemDedup {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.builder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val threshold = 0.35

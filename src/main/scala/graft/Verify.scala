@@ -43,20 +43,10 @@ object Verify {
     // optional trailing args: run only these queries (local iteration;
     // the driver always passes exactly two args and gets the full set)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors(), 32).toString)
     // 120 matches the documented contract above (the code briefly said 30,
     // which left the ~8 s gate queries a <4× margin in a slow driver env)
     val capSec = sys.env.getOrElse("SPARK_GRAFT_VERIFY_CAP", "120").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE sizes big shuffles from the data (see Bench's note)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
 

@@ -51,10 +51,8 @@ object P1Files {
       "usage: P1Files <node_information.csv> <training_set.txt> " +
         "<testing_set.txt> <ground_truth.txt> [maxIter]")
     val maxIter = if (args.length > 4) args(4).toInt else 100
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val builder = graft.Sessions.builder(graft.Sessions.cpus)
+    val spark = sys.env.get("SPARK_GRAFT_MASTER").fold(builder)(builder.master)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val (scored, metrics) = run(spark, args(0), args(1), args(2), args(3), maxIter)

@@ -17,7 +17,7 @@ import graft.functions.DotProduct
   * future operator genuinely demanded one.
   *
   * Usage:
-  *   SparkSession.builder().withExtensions(new GraftExtensions)...
+  *   graft.Sessions.builder(cpus).withExtensions(new GraftExtensions)...
   * or spark.sql.extensions=graft.plans.GraftExtensions, then
   *   SELECT dot_product(a.embedding, b.embedding) FROM ...
   */
@@ -110,7 +110,7 @@ object GraftExtensions {
     }
 
   /** Register into an already-built session (tests, REPLs) — the class
-    * above only applies through SparkSession.builder().withExtensions /
+    * above only applies through a builder's withExtensions /
     * spark.sql.extensions. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     org.apache.spark.sql.GraftBridge.registerFunction(

@@ -58,15 +58,25 @@ object Storage {
     * restarted drain keeps its partitioning regardless of session state.
     *
     * `noDataBatches` sets `spark.sql.streaming.noDataMicroBatches.enabled`
-    * for the streams started in `body`, restored in the same finally. */
+    * for the streams started in `body`, restored in the same finally.
+    *
+    * Artifact isolation is off in the scope. Spark keys its codegen cache
+    * on (context class loader, code), and each `writeStream.start()`
+    * clones the session; with isolation on, every clone gets its own
+    * executor class loader, so every call compiled the stream's classes
+    * again. The engine adds no session artifacts, so the streams lose
+    * nothing. The caller's own lazy artifact state is resolved before the
+    * scope opens, so the caller stays isolated. */
   private def withReplayPartitions[T](s: SparkSession, rows: Long,
       noDataBatches: Boolean = true)(body: => T): T = {
     val conf = s.conf
     val target = math.max(1L, math.min(
       s.sparkContext.defaultParallelism.toLong, rows / 2000L))
+    org.apache.spark.sql.GraftBridge.artifactIsolated(s)
     val scoped = Seq(
       "spark.sql.shuffle.partitions" -> target.toString,
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString)
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString,
+      "spark.sql.artifact.isolation.enabled" -> "false")
     val prev = scoped.map { case (k, _) => k -> conf.get(k) }
     scoped.foreach { case (k, v) => conf.set(k, v) }
     try body finally prev.foreach { case (k, v) => conf.set(k, v) }
@@ -409,7 +419,11 @@ object Storage {
         }
       } finally q.stop()
     }
-    s.table(name)
+    // the frame keeps the memory sink through its analyzed plan; the view
+    // would otherwise hold it, and its rows, for the session's lifetime
+    val survivors = s.table(name)
+    s.catalog.dropTempView(name)
+    survivors
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n_events"),
         sum($"value".cast("decimal(18,2)")).cast("double").as("value_sum"),

@@ -19,4 +19,10 @@ object GraftBridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "scala_udf")
+
+  /** Whether `spark`'s jobs run under their own session artifact state
+    * (and so their own executor class loader). Resolves the session's
+    * lazy artifact state. */
+  def artifactIsolated(spark: SparkSession): Boolean =
+    spark.sessionState.artifactManager.state != null
 }

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,6 +11,17 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(name: String) = s"/root/testdata/$name"
+
+  /** This suite's temp root: `afterAll` deletes it with everything in it. */
+  lazy val tempRoot: Path =
+    Files.createTempDirectory(s"graft-${getClass.getSimpleName}-")
+  def tempDir(prefix: String): Path = Files.createTempDirectory(tempRoot, prefix)
+  def tempFile(prefix: String, suffix: String): Path =
+    Files.createTempFile(tempRoot, prefix, suffix)
+
+  override def afterAll(): Unit =
+    try super.afterAll()
+    finally org.apache.hadoop.fs.FileUtil.fullyDelete(tempRoot.toFile)
 
   /** Runs `body` with `listener` registered, and returns only once the
     * listener has seen every event `body` caused. */
@@ -25,12 +38,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = Sessions.builder(Sessions.cpus)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       // managed tables (BucketingSpec) land in /tmp, not the repo tree
       .config("spark.sql.warehouse.dir",
         s"/tmp/graft-test-warehouse-${System.getProperty("user.name")}")

@@ -94,7 +94,7 @@ class LinkPredictorSpec extends SparkSpec {
 
   test("planPartitions reads a scan's width without a job and leaves an " +
       "exchange undecided") {
-    val dir = java.nio.file.Files.createTempDirectory("lp-width").toFile
+    val dir = tempDir("lp-width").toFile
     dir.deleteOnExit()
     val f = new java.io.File(dir, "edges.txt")
     java.nio.file.Files.writeString(f.toPath, "p1 p2 1\np2 p3 0\n")

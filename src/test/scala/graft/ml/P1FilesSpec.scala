@@ -22,7 +22,7 @@ class P1FilesSpec extends SparkSpec {
 
   /** Writes the four reference-format files; returns their directory. */
   private def writeFiles(): java.io.File = {
-    val dir = Files.createTempDirectory("p1files").toFile
+    val dir = tempDir("p1files").toFile
     dir.deleteOnExit()
 
     // A1: headerless CSV; title/authors carry quoted commas, one paper has

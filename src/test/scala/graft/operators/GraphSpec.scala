@@ -74,7 +74,7 @@ class GraphSpec extends SparkSpec {
   test("connectedComponents identical under a reliable checkpoint dir") {
     val es = Seq((1L, 2L), (2L, 3L), (10L, 11L))
     val before = ccMap(es)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = tempDir("graft-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     assert(ccMap(es) === before)
   }
@@ -260,8 +260,7 @@ class GraphSpec extends SparkSpec {
     val base = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     val off = base.agg(max($"doc_id")).head().getLong(0) + 1L
     def re(k: Int) = base.withColumn("doc_id", $"doc_id" + k * off)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-ccq-").toString
+    val tmp = tempDir("graft-ccq-").toString
     base.unionByName(re(1)).unionByName(re(2))
       .write.mode("overwrite").parquet(tmp + "/documents.parquet")
     val direct = Graph.connectedComponents(

@@ -132,7 +132,7 @@ class TemporalJoinSpec extends SparkSpec {
     }
     val base = rows.toDF("event_id", "us", "user_id", "event_type", "value", "props")
     def write(name: String, tsCol: org.apache.spark.sql.Column): String = {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-asof-$name").toString
+      val dir = tempDir(s"graft-asof-$name").toString
       base.select($"event_id", tsCol.as("ts"), $"user_id", $"event_type",
           $"value", $"props")
         .write.mode("overwrite").parquet(s"$dir/events.parquet")

@@ -109,8 +109,7 @@ class SemanticDedupSpec extends SparkSpec {
       c <- 0 until 6
     } yield ((bi * 100 + c).toLong, bi, v)) ++ Seq.tabulate(5)(i =>
       (9000L + i, 90 + i, Array.fill(dim)(rng.nextGaussian().toFloat)))
-    val tmp = java.nio.file.Files
-      .createTempDirectory("semdedup_twin").toString
+    val tmp = tempDir("semdedup_twin").toString
     rows.toDF("vec_id", "label", "embedding")
       .write.mode("overwrite").parquet(tmp + "/embeddings.parquet")
 

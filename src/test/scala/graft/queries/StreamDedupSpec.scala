@@ -9,8 +9,8 @@ import graft.sources.Tables
 
 /** The watermarked-dedup replay (`Storage.streamDedup`, q_stream_dedup):
   * its result against the oracle's aggregate over the raw slice, its two
-  * micro-batches, the session conf it leaves behind, and the driver-side
-  * replay order. */
+  * micro-batches, the session conf and views it leaves behind, the code
+  * it compiles again on a rerun, and the driver-side replay order. */
 class StreamDedupSpec extends SparkSpec {
 
   test("streamDedup equals the oracle aggregate over the raw slice, runs " +
@@ -39,11 +39,39 @@ class StreamDedupSpec extends SparkSpec {
     assert(batches.map(_.numInputRows > 0) === Seq(true, true),
       batches.map(p => s"batch ${p.batchId}: ${p.numInputRows} rows"))
 
-    Tables.events(spark, dir).createOrReplaceTempView("events")
-    val want = try spark.sql(SparkEntry.oracleSql("q_stream_dedup")).collect().toSeq
-      finally spark.catalog.dropTempView("events")
+    val want = oracleRows(dir)
     assert(want.nonEmpty)
     assert(got === want)
+  }
+
+  /** The oracle's SQL run by Spark over `Tables.events`. */
+  private def oracleRows(dir: String) = {
+    Tables.events(spark, dir).createOrReplaceTempView("events")
+    try spark.sql(SparkEntry.oracleSql("q_stream_dedup")).collect().toSeq
+    finally spark.catalog.dropTempView("events")
+  }
+
+  test("streamDedup leaves no memory-sink view behind, and its rows still " +
+      "equal the oracle") {
+    val dir = sf("sf0.01")
+    val got = Storage.streamDedup(spark, dir).collect().toSeq
+    val views = spark.catalog.listTables().collect().map(_.name)
+    assert(!views.exists(_.startsWith("graft_stream_dedup_")), views.mkString(", "))
+    assert(got === oracleRows(dir))
+  }
+
+  test("a second streamDedup call compiles no class, and a fresh session " +
+      "whose first query is q_stream_dedup keeps its own artifact state") {
+    val dir = sf("sf0.01")
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    Storage.streamDedup(spark, dir).collect()
+    val before = compiles.getCount
+    Storage.streamDedup(spark, dir).collect()
+    assert(compiles.getCount - before === 0L)
+
+    val fresh = spark.newSession()
+    SparkEntry.queries("q_stream_dedup")(fresh, dir).collect()
+    assert(org.apache.spark.sql.GraftBridge.artifactIsolated(fresh))
   }
 
   test("the driver-side replay order equals orderBy(ts, event_id), with " +

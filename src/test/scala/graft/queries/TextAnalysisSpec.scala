@@ -703,8 +703,7 @@ class TextAnalysisSpec extends SparkSpec {
       (2L, "srcX", "delta epsilon delta"),
       (3L, "srcY", "epsilon zeta zeta"),
       (4L, "srcZ", "alpha delta"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-dsir-").toString
+    val dir = tempDir("graft-dsir-").toString
     docs.toDF("doc_id", "source", "text")
       .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
       .withColumn("n_chars",
@@ -754,8 +753,7 @@ class TextAnalysisSpec extends SparkSpec {
       (2L, "srcX", "cat the on sat zebra quark lemon vivid"),
       (3L, "srcY", "the cat"),
       (4L, "srcZ", "lonely"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-lmflu-").toString
+    val dir = tempDir("graft-lmflu-").toString
     docs.toDF("doc_id", "source", "text")
       .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
       .withColumn("n_chars",

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
 class TwinCollapseSpec extends SparkSpec {
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   test("multisetPairs engages the twin collapse and matches a local " +
       "brute force (multiset AND set counts, intra + cross rows)") {

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -13,7 +11,7 @@ class MaintenanceSpec extends SparkSpec {
   test("compact: fragmented table to ~target-sized files, data identical") {
     val spark2 = spark
     import spark2.implicits._
-    val base = Files.createTempDirectory("graft-compact").toString
+    val base = tempDir("graft-compact").toString
     // 64 fragments of a small table
     spark.range(20000L).select($"id", ($"id" % 97).as("v"))
       .repartition(64)
@@ -38,7 +36,7 @@ class MaintenanceSpec extends SparkSpec {
   test("compact rejects an equivalent (not just string-equal) destination") {
     val spark2 = spark
     import spark2.implicits._
-    val base = Files.createTempDirectory("graft-compact-self").toString
+    val base = tempDir("graft-compact-self").toString
     Seq((1L, 1)).toDF("id", "v").write.parquet(s"$base/t")
     for (alias <- Seq(s"$base/t", s"$base/t/", s"$base/./t")) {
       val e = intercept[IllegalArgumentException] {
@@ -53,7 +51,7 @@ class MaintenanceSpec extends SparkSpec {
   test("readEvolved unions schemas; old files null-fill the new column") {
     val spark2 = spark
     import spark2.implicits._
-    val base = Files.createTempDirectory("graft-evolve").toString
+    val base = tempDir("graft-evolve").toString
     Seq((1L, "a"), (2L, "b")).toDF("id", "name")
       .write.parquet(s"$base/t")
     // schema grows a column; append without rewriting old files

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -15,7 +13,7 @@ class PartitionedLayoutSpec extends SparkSpec {
   test("partition-column filter prunes at planning time") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = Files.createTempDirectory("graft-partlayout").toString
+    val dir = tempDir("graft-partlayout").toString
     val events = Tables.events(spark, sf("sf0.001"))
       .withColumn("day", date_format($"ts", "yyyy-MM-dd"))
     PartitionedLayout.writePartitioned(events, dir, Seq("day"))

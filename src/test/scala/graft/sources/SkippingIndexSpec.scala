@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -16,7 +14,7 @@ class SkippingIndexSpec extends SparkSpec {
   private def writeClustered(): String = {
     val spark2 = spark
     import spark2.implicits._
-    val dir = Files.createTempDirectory("graft-skip").toString
+    val dir = tempDir("graft-skip").toString
     (0L until 800L).map(i => (i, s"p$i", (i % 7).toInt))
       .toDF("k", "payload", "tag")
       .repartitionByRange(8, $"k")
@@ -60,7 +58,7 @@ class SkippingIndexSpec extends SparkSpec {
     "nothing but keeps the schema") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = Files.createTempDirectory("graft-skip-null").toString
+    val dir = tempDir("graft-skip-null").toString
     // file with an all-null column next to a normal one
     Seq((Option.empty[Long], "a"), (None, "b")).toDF("k", "payload")
       .coalesce(1).write.mode("overwrite").parquet(dir)

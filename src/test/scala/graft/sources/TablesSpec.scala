@@ -10,7 +10,7 @@ import graft.SparkSpec
 class TablesSpec extends SparkSpec {
 
   private def tmpFile(name: String, lines: Seq[String]): String = {
-    val f = Files.createTempFile(s"graft-$name", ".txt")
+    val f = tempFile(s"graft-$name", ".txt")
     Files.write(f, String.join("\n", lines: _*).getBytes)
     f.toString
   }
@@ -28,7 +28,7 @@ class TablesSpec extends SparkSpec {
 
   test("table memoizes the parquet schema: the first read of a file runs " +
       "one job, a second read of the unchanged file none") {
-    val dir = Files.createTempDirectory("graft-schema-memo").toString
+    val dir = tempDir("graft-schema-memo").toString
     spark.range(3).toDF("k").coalesce(1).write.parquet(s"$dir/t.parquet")
     assert(jobsDuring(Tables.table(spark, dir, "t")) === 1)
     assert(jobsDuring(Tables.table(spark, dir, "t")) === 0)
@@ -37,7 +37,7 @@ class TablesSpec extends SparkSpec {
 
   test("table reads a file rewritten in place with its new schema, " +
       "without Caches.invalidate") {
-    val dir = Files.createTempDirectory("graft-schema-rewrite").toString
+    val dir = tempDir("graft-schema-rewrite").toString
     val path = s"$dir/t.parquet"
     spark.range(3).toDF("k").coalesce(1).write.parquet(path)
     assert(Tables.table(spark, dir, "t").columns.toSeq === Seq("k"))
@@ -96,7 +96,7 @@ class TablesSpec extends SparkSpec {
       .withColumn("value", lit(1.5))
       .withColumn("props", lit("{}"))
     def writeShape(name: String, tsCol: org.apache.spark.sql.Column): String = {
-      val dir = Files.createTempDirectory(s"graft-events-$name").toString
+      val dir = tempDir(s"graft-events-$name").toString
       base.select(col("event_id"), tsCol.as("ts"), col("user_id"),
           col("event_type"), col("value"), col("props"))
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -121,7 +121,7 @@ class TablesSpec extends SparkSpec {
     import org.apache.spark.sql.types._
     val spark2 = spark
     import spark2.implicits._
-    val dir = Files.createTempDirectory("graft-drift").toString
+    val dir = tempDir("graft-drift").toString
     // int32 ids, float64 embeddings, reordered columns — plausible
     // regenerations of the same logical tables
     Seq((1, "hello world", "en", "s", 11))
@@ -145,7 +145,7 @@ class TablesSpec extends SparkSpec {
   test("JSONL round-trip: gzip shards, explicit schema, row equality") {
     import org.apache.spark.sql.functions._
     val docs = Tables.documents(spark, sf("sf0.001"))
-    val dir = Files.createTempDirectory("graft-jsonl").toString + "/docs"
+    val dir = tempDir("graft-jsonl").toString + "/docs"
     Tables.writeJsonl(docs.repartition(3), dir, compression = "gzip")
     val files = new java.io.File(dir).listFiles().map(_.getName)
     assert(files.count(_.endsWith(".json.gz")) === 3, files.toSeq.toString)

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -38,7 +36,7 @@ class UpsertSpec extends SparkSpec {
   test("snapshot upsert rejects duplicate update keys") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = Files.createTempDirectory("graft-upsert-dup").toString
+    val dir = tempDir("graft-upsert-dup").toString
     Seq((1L, 10)).toDF("id", "v").write.parquet(s"$dir/v1")
     val dup = Seq((2L, 99), (2L, 77)).toDF("id", "v")
     val e = intercept[IllegalArgumentException] {
@@ -50,7 +48,7 @@ class UpsertSpec extends SparkSpec {
   test("snapshot upsert rejects null update keys by name") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = Files.createTempDirectory("graft-upsert-null").toString
+    val dir = tempDir("graft-upsert-null").toString
     Seq((1L, 10)).toDF("id", "v").write.parquet(s"$dir/v1")
     val withNull = Seq((Some(2L), 99), (None, 77)).toDF("id", "v")
     val e = intercept[IllegalArgumentException] {
@@ -62,7 +60,7 @@ class UpsertSpec extends SparkSpec {
   test("equivalent destination paths are rejected, not just string-equal") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = Files.createTempDirectory("graft-upsert-self").toString
+    val dir = tempDir("graft-upsert-self").toString
     Seq((1L, 10)).toDF("id", "v").write.parquet(s"$dir/v1")
     val up = Seq((1L, 99)).toDF("id", "v")
     // trailing slash and a dot segment both resolve to the source itself
@@ -80,7 +78,7 @@ class UpsertSpec extends SparkSpec {
   test("a symlinked destination alias of the source is rejected") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = Files.createTempDirectory("graft-upsert-link").toString
+    val dir = tempDir("graft-upsert-link").toString
     Seq((1L, 10)).toDF("id", "v").write.parquet(s"$dir/v1")
     java.nio.file.Files.createSymbolicLink(
       java.nio.file.Paths.get(s"$dir/alias"),
@@ -96,7 +94,7 @@ class UpsertSpec extends SparkSpec {
   test("merge keeps numeric-looking string partitions intact (no inference rename)") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = Files.createTempDirectory("graft-merge-infer").toString
+    val dir = tempDir("graft-merge-infer").toString
     // month=01: type inference would read this back as int 1 and the
     // rewrite would emit a NEW month=1 directory — a silent layout split
     val base = Seq((1L, "01", "a"), (2L, "01", "b"), (3L, "02", "c"))
@@ -122,7 +120,7 @@ class UpsertSpec extends SparkSpec {
   test("merge fails loudly when a matched key lives in a null base partition") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = Files.createTempDirectory("graft-merge-nullpart").toString
+    val dir = tempDir("graft-merge-nullpart").toString
     Seq((Some(1L), Option.empty[String], "a"), (Some(2L), Some("en"), "b"))
       .toDF("id", "lang", "text")
       .write.partitionBy("lang").parquet(s"$dir/v1")
@@ -137,7 +135,7 @@ class UpsertSpec extends SparkSpec {
   test("merge with many touched partitions takes the semi-join path correctly") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = Files.createTempDirectory("graft-merge-many").toString
+    val dir = tempDir("graft-merge-many").toString
     // 70 single-row partitions: above the 64-partition literal-predicate
     // cutoff, so the broadcast semi-join branch plans the rewrite
     val base = (0 until 70).map(i => (i.toLong, f"p$i%02d", s"old-$i"))
@@ -157,7 +155,7 @@ class UpsertSpec extends SparkSpec {
   test("partition-scoped merge rewrites only touched partitions; the rest are byte-identical") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = Files.createTempDirectory("graft-merge-part").toString
+    val dir = tempDir("graft-merge-part").toString
     val base = Seq(
       (1L, "en", "old-1"), (2L, "en", "old-2"),
       (42L, "fr", "old-42"), (43L, "fr", "old-43"),
@@ -203,7 +201,7 @@ class UpsertSpec extends SparkSpec {
   test("snapshot upsert + deleteWhere leave the old snapshot untouched") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = Files.createTempDirectory("graft-upsert").toString
+    val dir = tempDir("graft-upsert").toString
     Seq((1L, 10), (2L, 20), (3L, 30)).toDF("id", "v")
       .write.parquet(s"$dir/v1")
     Upsert.upsertSnapshot(spark, s"$dir/v1",

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -81,7 +79,7 @@ class ZOrderSpec extends SparkSpec {
     def totalFiles(path: String): Long =
       spark.read.parquet(path)
         .select(input_file_name()).distinct().count()
-    val base = Files.createTempDirectory("graft-zorder").toString
+    val base = tempDir("graft-zorder").toString
     df.repartitionByRange(16, $"x").sortWithinPartitions($"x")
       .write.parquet(s"$base/linear")
     ZOrder.cluster(df, Seq("x", "y"), bits = 8, numFiles = 16)

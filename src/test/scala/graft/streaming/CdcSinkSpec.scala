@@ -29,7 +29,7 @@ class CdcSinkSpec extends SparkSpec {
     val spark2 = spark
     import spark2.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("graft-cdc").toString
+    val root = tempDir("graft-cdc").toString
     CdcSink.init(Seq((1L, "a"), (2L, "b")).toDF("id", "payload"), root)
     assert(CdcSink.currentSnapshot(spark, root).endsWith("/v0"))
 
@@ -60,9 +60,9 @@ class CdcSinkSpec extends SparkSpec {
     import org.apache.spark.sql.types._
     val spark2 = spark
     import spark2.implicits._
-    val land = Files.createTempDirectory("graft-cdc-land").toString
-    val root = Files.createTempDirectory("graft-cdc-durable").toString
-    val ckpt = Files.createTempDirectory("graft-cdc-durable-ckpt").toString
+    val land = tempDir("graft-cdc-land").toString
+    val root = tempDir("graft-cdc-durable").toString
+    val ckpt = tempDir("graft-cdc-durable-ckpt").toString
     CdcSink.init(Seq((1L, "a")).toDF("id", "payload"), root)
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("payload", StringType), StructField("_op", StringType),
@@ -104,7 +104,7 @@ class CdcSinkSpec extends SparkSpec {
   test("crash replay is idempotent; a foreign checkpoint is rejected") {
     val spark2 = spark
     import spark2.implicits._
-    val root = Files.createTempDirectory("graft-cdc-replay").toString
+    val root = tempDir("graft-cdc-replay").toString
     CdcSink.init(Seq((1L, "a")).toDF("id", "payload"), root)
     val changes = Seq((2L, "b", "U", 1L)).toDF("id", "payload", "_op", "_seq")
     CdcSink.commitBatch(changes, root, Seq("id"), batchId = 0L)

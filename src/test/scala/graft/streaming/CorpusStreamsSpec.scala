@@ -38,8 +38,8 @@ class CorpusStreamsSpec extends SparkSpec {
 
   test("jsonl landing-dir stream: each shard exactly once across restarts") {
     import org.apache.spark.sql.streaming.Trigger
-    val land = java.nio.file.Files.createTempDirectory("graft-land").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val land = tempDir("graft-land").toString
+    val ckpt = tempDir("graft-ckpt").toString
     def drop(name: String, ids: Seq[Long]): Unit = {
       val lines = ids.map(i =>
         s"""{"doc_id": $i, "text": "doc $i", "lang": "en", "source": "s", "n_chars": 5}""")
@@ -75,7 +75,7 @@ class CorpusStreamsSpec extends SparkSpec {
       "near-dup is flagged against the standing corpus") {
     val spark2 = spark
     import spark2.implicits._
-    val land = java.nio.file.Files.createTempDirectory("graft-land2").toString
+    val land = tempDir("graft-land2").toString
     val corpus = Seq(
       (1L, "a b c d e f g h", "en"),
       (2L, "z y x w v u t s", "en")).toDF("doc_id", "text", "lang")
@@ -101,8 +101,8 @@ class CorpusStreamsSpec extends SparkSpec {
   test("jsonl landing-dir stream routes malformed lines to _corrupt, " +
       "not all-null document rows") {
     import org.apache.spark.sql.streaming.Trigger
-    val land = java.nio.file.Files.createTempDirectory("graft-land3").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt3").toString
+    val land = tempDir("graft-land3").toString
+    val ckpt = tempDir("graft-ckpt3").toString
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$land/mixed.jsonl"),
       Seq(
