@@ -685,7 +685,8 @@ object SparkEntry {
         |), pr AS (
         |  SELECT score AS threshold,
         |    CAST(cum_tp AS DOUBLE) / CAST(cum_pred AS DOUBLE) AS precision,
-        |    CAST(cum_tp AS DOUBLE) / CAST(total_pos AS DOUBLE) AS recall
+        |    CASE WHEN total_pos = 0 THEN 0.0
+        |         ELSE CAST(cum_tp AS DOUBLE) / CAST(total_pos AS DOUBLE) END AS recall
         |  FROM cum
         |)
         |SELECT threshold, precision, recall,

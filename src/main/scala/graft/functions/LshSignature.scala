@@ -11,10 +11,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * returning array<long> (element t = the nBits-bit signature in table
   * t).
   *
-  * Why fused (r16, found by ProfileLshTopK at the 100× decade): the
-  * previous formulation was an expression FOREST — nTables × nBits
-  * independent DotProduct nodes under CaseWhens, ORs, structs and an
-  * array constructor. Valued, that forest cost 300–600 µs/row (96
+  * Why fused (r16, found by a stage profile at the 100× decade,
+  * SCALE_r16.md §6b): the previous formulation was an expression
+  * FOREST — nTables × nBits independent DotProduct nodes under
+  * CaseWhens, ORs, structs and an array constructor. Valued, that
+  * forest cost 300–600 µs/row (96
   * separate 64-element loops, each re-reading the vector from ArrayData,
   * with the generated code past the JIT's happy path) — 60.5 s of
   * q_lsh_topk's 62 s at sfp100 was THIS, misattributed to the candidate

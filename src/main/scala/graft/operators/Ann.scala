@@ -121,24 +121,13 @@ object Ann {
   def assignCell(centroids: Seq[Array[Double]])(vec: Column): Column =
     array_max(cellScores(centroids)(vec)).getField("cell")
 
-  /** Plan-literal centroid chains stay codegen-friendly up to this many
-    * cells; beyond it the nCells-term expression tree outgrows whole-
-    * stage codegen and evaluation degrades, so large quantizers take the
-    * broadcast-join assignment instead. Measured at the r14 perturbed
-    * 30× decade (60k DISTINCT vectors, 240 cells by the ~250/cell law):
-    * ivfFit's three Lloyd passes cost 229.6 s on the literal chain vs
-    * ~10 s joined — the fit was 80 % of q_semantic_dedup's 287 s. Every
-    * driver SF fits ≤ 16 cells, so the shipped sf0.001–0.1 plans (and
-    * their centroid-embed oracles) are byte-identical either way. */
-  val LiteralCentroidBound = 32
-
   /** Fused top-`nProbe` cell assignment (r18, VERDICT r17 #1 — the
     * PqCodesFused pattern applied to the coarse quantizer): ONE codegen
     * kernel returns the top-nProbe cell ids by (score DESC, cell DESC);
     * element 1 IS assignCell's argmax. Replaces BOTH prior dispatch arms
-    * everywhere on the corpus-sized paths — the ≤LiteralCentroidBound
-    * literal struct chain AND the broadcast-join assignment, whose
-    * nCells× row explosion dominated the semantic-dedup fit at the
+    * everywhere on the corpus-sized paths — the ≤ 32-cell literal
+    * struct chain (SCALE_r14.md §3) AND the broadcast-join assignment,
+    * whose nCells× row explosion dominated the semantic-dedup fit at the
     * sfp100 decade (200k rows × 800 cells = 160M joined rows per Lloyd
     * pass). Bit-parity with both pinned in AnnSpec; the prior forms stay
     * below as executable parity witnesses. */
@@ -222,7 +211,7 @@ object Ann {
       // Behind the barrier the cell is computed once per row and the
       // shuffle is a slim (cell, v) pair, nCells-independent. The r18
       // fused kernel (ivfProbes) replaces both prior dispatch arms:
-      // the literal chain (fine ≤ LiteralCentroidBound) and the
+      // the literal chain (fine ≤ 32 cells) and the
       // broadcast-join assignment, whose nCells× row explosion was the
       // decade fit's real cost — decision-identical by AnnSpec pin.
       val assigned =
@@ -373,7 +362,7 @@ object Ann {
     * law only engages beyond the pinned-calibration regime. Recall
     * falls with bits (1 − (1 − p^b)^T): fine at production near-dup
     * thresholds (cosine ≥ 0.9 ⇒ p ≈ 0.86; b = 9, T = 24 still gives
-    * 0.999 — measured in TuneLshBits), but NOT at this corpus's loose
+    * 0.999 — measured, SCALE_r14.md §5), but NOT at this corpus's loose
     * 0.35 exploratory threshold (p ≈ 0.61; the r12 5-bit retune was
     * measured losing real borderline pairs) — which is why
     * q_lsh_neardup keeps its pinned 4 bits and the law ships as the
@@ -395,7 +384,7 @@ object Ann {
     * law (VERDICT r14 #4): per-hyperplane collision probability
     * p = 1 − acos(θ)/π ≥ ~0.75 there, so widening to b =
     * nBitsForCorpus(n) keeps recall 1−(1−p^b)^T high (cosine 0.9 ⇒
-    * b = 9, T = 24 still 0.999 — TuneLshBits), while below it the r12
+    * b = 9, T = 24 still 0.999 — SCALE_r14.md §5), while below it the r12
     * retune MEASURED real borderline pairs lost at 5 bits — the
     * exploratory regime keeps pinned 4 bits and relies on the
     * candidate-volume gate to fail fast instead. */
@@ -911,7 +900,7 @@ object Ann {
     * generated encode method is mSub·kSub inlined dot products and
     * janino refuses methods past 64 KB (measured: 8×64 = 512 chains
     * fail to compile and the whole stage silently degrades to
-    * interpreted eval — the IVF LiteralCentroidBound failure shape). */
+    * interpreted eval — the IVF literal-chain failure shape). */
   def pqCodes(cb: Seq[Seq[Array[Double]]], dSub: Int)(vh: Column): Column =
     array(cb.indices.map { m =>
       pqCellOf(cb(m), slice(vh, m * dSub + 1, dSub))
@@ -1098,9 +1087,8 @@ object Ann {
   /** Coarse cell + residual for each unit-normalized vector — the frame
     * IVF-PQ's codebooks are trained on and its codes reconstruct
     * against. Assignment is argmax dot(vh, c) with ties toward the
-    * larger cell (the assignCell convention); literal chains below
-    * LiteralCentroidBound, broadcast-join past it, decision-identically.
-    * `nv` must expose (id, vh); output (id, cell, rv). Assignment is the
+    * larger cell (the assignCell convention). `nv` must expose
+    * (id, vh); output (id, cell, rv). Assignment is the
     * r18 fused kernel (ivfProbes element 1 ≡ assignCell's argmax,
     * parity-pinned in AnnSpec) — one loop nest per row at any nCells,
     * replacing the literal-chain/broadcast-join dispatch. */

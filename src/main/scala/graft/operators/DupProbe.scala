@@ -35,9 +35,9 @@ import org.apache.spark.sql.functions._
 object DupProbe {
 
   /** Duplication factor above which the pairwise valves switch from the
-    * direct plan to exact-twin collapse. Measured sensitivity sweep
-    * (graft.TuneValve on the real sf0.1 embeddings corpus, SCALE_r13.md
-    * §3): the crossover sits between dup 1.1 and 1.2; the constant is
+    * direct plan to exact-twin collapse. Measured sensitivity sweep (on
+    * the real sf0.1 embeddings corpus, SCALE_r13.md §3): the crossover
+    * sits between dup 1.1 and 1.2; the constant is
     * deliberately above it because the mistakes are asymmetric —
     * holding the direct plan slightly too long costs ≤ ~40% once (6.2
     * vs 4.4 s at dup 1.4), while collapsing a replica-free corpus (the

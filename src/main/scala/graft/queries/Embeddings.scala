@@ -157,7 +157,7 @@ object Embeddings {
     * embedding) frame — split out (r16) so the sampled-gate production
     * posture can build the exact side from a SAMPLED corpus directly
     * (the lshRecall scaladoc's "at scale" form) instead of filtering
-    * the full pair frame; TuneSampledRecall measures it. */
+    * the full pair frame; SCALE_r16.md §5 measures it. */
   private[graft] def cosineNearDupPairsFrom(s: SparkSession,
       raw: DataFrame, threshold: Double): DataFrame = {
     import s.implicits._
@@ -419,7 +419,8 @@ object Embeddings {
     * way: each vector joins under its `nAssign` nearest cells, so a pair
     * is found when ANY cell is shared. Measured on this corpus's loose
     * 0.35 threshold (the worst case for clustering — barely-similar
-    * pairs), via graft.TuneSemDedup over the deterministic fit:
+    * pairs), by a driver-side recompute over the deterministic fit (r8,
+    * the shape SemanticDedupSpec still runs):
     * single-assign recall ≈ 0.34-0.38 across (nCells, lloydIters) ∈
     * {8,16}×{1,3,8}; top-2 at (8, 3) 0.73-0.79 for a 4× candidate
     * factor; top-3 at (8, 3) 0.954/0.963/0.957 at sf0.1/0.01/0.001 for

@@ -1244,8 +1244,11 @@ object Extended {
     * with the fitted doubles embedded as oracle literals. 8 subspaces ×
     * 8 dims × 64 centroids (48 code bits) over unit-normalized
     * embeddings — 64 was tuned on the real corpora (uniform random
-    * vectors, PQ's structureless worst case): shortlist-recall@50 at
-    * sf0.01 read 0.78 / 0.88 / 0.94 for kSub 32 / 64 / 64+4iters. */
+    * vectors, PQ's structureless worst case). The r14 grid,
+    * shortlist-recall@(5 in 50) against exact cosine at sf0.01 / sf0.1:
+    * kSub 16, 2 Lloyd iters 0.72 / 0.48; 32, 2 0.78 / 0.66; 64, 2
+    * 0.88 / 0.62; 64, 4 0.94 / 0.72. SCALE_r14.md §9 has the decade
+    * numbers and the kSub 256 arm. */
   val PqMSub = 8
   val PqDSub = 8
   val PqKSub = 64
@@ -1483,13 +1486,14 @@ object Extended {
     * with cell pruning in the loop): how much of the exact cosine top-5
     * survives the probed ADC top-50. Losses decompose into probe misses
     * (true neighbor in an unprobed cell) + quantization (ADC misranks
-    * within probed cells); graft.TuneIvfPq measures the split (r14:
-    * sf0.1 full-probe 0.48 vs raw-PQ 0.72 — on UNIFORM vectors the
-    * residual carries ~2× a unit vector's energy, ‖v̂ − c‖ ≈ √2, so
-    * residual coding is the dominant loss and probing costs little; on
-    * clustered production embeddings the inequality flips, which is
-    * why the composition exists). Hash-checked — the oracle replays
-    * BOTH sides. */
+    * within probed cells). SCALE_r14.md §10 measures the split, which
+    * is what the shipped nProbe = 8 rests on (r14, shortlist@50, raw-PQ
+    * scan-all / full probe 16 / 8 / 4: sf0.1 0.72 / 0.48 / 0.48 / 0.38,
+    * sfp30 0.32 / 0.26 / 0.24 / 0.24). On UNIFORM vectors the residual
+    * carries ~2× a unit vector's energy, ‖v̂ − c‖ ≈ √2, so residual
+    * coding is the dominant loss and probing costs little; on clustered
+    * production embeddings the inequality flips, which is why the
+    * composition exists. Hash-checked — the oracle replays BOTH sides. */
   def ivfPqRecall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = Tables.embeddings(s, dir)

@@ -287,32 +287,16 @@ object Relational {
   }
 
   /** Relational threshold-sweep metrics (A5' — replaces the reference's
-    * RDD BinaryClassificationMetrics, Predictor.scala:319-342, with an
-    * oracle-checkable groupBy + window-cumsum formulation). Scores/labels
-    * are derived deterministically from lineitem. */
+    * RDD BinaryClassificationMetrics, Predictor.scala:319-342): p1's own
+    * sweep (LinkPredictor.sweepMetrics) over scores/labels derived
+    * deterministically from lineitem. A lineitem with no 'R' row has no
+    * positives, and recall is 0.0 there, not a division by zero. */
   def thresholdSweep(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val scored = Tables.lineitem(s, dir)
-      .select($"l_discount".as("score"),
-        when($"l_returnflag" === "R", 1L).otherwise(0L).as("label"))
-    val grouped = scored.groupBy($"score")
-      .agg(sum($"label").as("pos"), count(lit(1)).as("tot"))
-    val wOrd = Window.orderBy($"score".desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.partitionBy()
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    grouped
-      .withColumn("cum_tp", sum($"pos").over(wOrd))
-      .withColumn("cum_pred", sum($"tot").over(wOrd))
-      .withColumn("total_pos", sum($"pos").over(wAll))
-      .select(
-        $"score".as("threshold"),
-        ($"cum_tp".cast("double") / $"cum_pred".cast("double")).as("precision"),
-        ($"cum_tp".cast("double") / $"total_pos".cast("double")).as("recall"))
-      .withColumn("f1",
-        when($"precision" + $"recall" === 0.0, 0.0)
-          .otherwise(lit(2.0) * $"precision" * $"recall" / ($"precision" + $"recall")))
-      .orderBy($"threshold".desc)
+    graft.ml.LinkPredictor.sweepMetrics(
+      Tables.lineitem(s, dir).select($"l_discount".as("score"),
+        when($"l_returnflag" === "R", 1L).otherwise(0L).as("label")),
+      "score")
   }
 
   /** Null-safe equi-join — the reference joins EVERY key with `<=>`

@@ -227,7 +227,7 @@ class AnnSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(7)
     def vec() = Array.fill(8)(rnd.nextDouble() * 2 - 1)
-    val cents: Seq[Array[Double]] = Seq.fill(40) { // > LiteralCentroidBound
+    val cents: Seq[Array[Double]] = Seq.fill(40) { // > the 32-cell literal bound
       val v = vec(); val n = math.sqrt(v.map(x => x * x).sum)
       v.map(_ / n)
     }
@@ -256,7 +256,7 @@ class AnnSpec extends SparkSpec {
     def unit(v: Array[Double]) = {
       val n = math.sqrt(v.map(x => x * x).sum); v.map(_ / n)
     }
-    // below and past LiteralCentroidBound — the two old dispatch arms
+    // below and past the 32-cell literal bound — the two old dispatch arms
     for (nCells <- Seq(12, 40)) {
       val cents: Seq[Array[Double]] = Seq.fill(nCells)(unit(vec()))
       val cv = (0L until 300L).map(i => (i, vec())).toDF("id", "v")

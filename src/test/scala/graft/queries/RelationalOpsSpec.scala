@@ -89,4 +89,38 @@ class RelationalOpsSpec extends SparkSpec {
     assert(closed === Set(
       (None, 3L, 2L), (Some(10L), 6L, 3L), (Some(30L), 1L, 1L)))
   }
+
+  test("thresholdSweep on an all-negative lineitem: recall and f1 are 0.0 " +
+      "on every row, and its DuckDB oracle answers the same bits") {
+    val s = spark
+    import s.implicits._
+    // sf0.001's lineitem with every 'R' flag turned 'N': no positives
+    val dir = tempDir("allneg").toString
+    spark.read.parquet(sf("sf0.001") + "/lineitem.parquet")
+      .select($"l_discount",
+        org.apache.spark.sql.functions.regexp_replace($"l_returnflag", "R", "N")
+          .as("l_returnflag"))
+      .write.parquet(s"$dir/lineitem.parquet")
+    val rows = Relational.thresholdSweep(spark, dir).collect()
+      .map(r => Seq(0, 1, 2, 3).map(r.getDouble))
+    assert(rows.length > 1)
+    assert(rows.forall(r => r(1) == 0.0 && r(2) == 0.0 && r(3) == 0.0))
+    // the same rows, double for double, from the oracle SQL in DuckDB
+    import scala.sys.process._
+    assume(Seq("python3", "-c", "import duckdb").! == 0,
+      "python3 with duckdb is not on the PATH")
+    val replay =
+      """import duckdb, struct, sys
+        |con = duckdb.connect()
+        |con.sql(f"CREATE VIEW lineitem AS SELECT * FROM '{sys.argv[1]}/lineitem.parquet/*.parquet'")
+        |for r in con.sql(sys.stdin.read()).fetchall():
+        |    print(" ".join(struct.pack(">d", v).hex() for v in r))""".stripMargin
+    val sql = graft.SparkEntry.oracleSql("q_threshold_sweep")
+    val duck = (Seq("python3", "-c", replay, dir) #<
+      new java.io.ByteArrayInputStream(sql.getBytes("UTF-8"))).!!
+      .split("\n").filter(_.nonEmpty).toSeq
+    val bits = rows.map(_.map(v =>
+      f"${java.lang.Double.doubleToRawLongBits(v)}%016x").mkString(" ")).toSeq
+    assert(duck === bits)
+  }
 }

@@ -144,9 +144,9 @@ class SemanticDedupSpec extends SparkSpec {
     val recall = found.toDouble / all.length
     info(f"multi-probe cluster recall at sf0.001: $recall%.3f ($found/${all.length})")
     // floor pinned under the measured value (top-3 at (8,3) measures
-    // 0.957/0.963/0.954 at sf0.001/0.01/0.1 — graft.TuneSemDedup): a
-    // broken fit, or a silent fall-back to fewer probes, collapses
-    // recall well below it (top-2 measures 0.73-0.79)
+    // 0.957/0.963/0.954 at sf0.001/0.01/0.1, Embeddings.semanticDedup's
+    // scaladoc): a broken fit, or a silent fall-back to fewer probes,
+    // collapses recall well below it (top-2 measures 0.73-0.79)
     assert(recall >= 0.90, f"cluster recall $recall%.3f")
   }
 }
