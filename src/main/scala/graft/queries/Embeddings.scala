@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.BoundedSort._
 import graft.sources.Tables
 
 /** Embedding similarity-search queries: brute-force cosine top-k (exact
@@ -343,7 +344,7 @@ object Embeddings {
         sum($"dims").as("total_dims"),
         sum($"n_pos").as("sum_pos"),
         sum($"q_sum").as("sum_q16"))
-      .orderBy($"label")
+      .boundedSort($"label")
   }
 
   /** Per-label centroids: posexplode → groupBy (label, dim) mean. The
@@ -392,7 +393,7 @@ object Embeddings {
       .groupBy($"label", $"dim")
       .agg((sum($"xs").cast("double") / count(lit(1)) / scale).as("m"),
         count(lit(1)).as("n_vecs"))
-      .orderBy($"label", $"dim")
+      .boundedSort($"label", $"dim")
   }
 
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at

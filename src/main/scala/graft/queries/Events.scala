@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
+import graft.plans.BoundedSort._
 import graft.sources.Tables
 
 /** Event-stream batch queries: tumbling-window aggregation, JSON column
@@ -46,7 +47,7 @@ object Events {
         min($"k").as("min_k"),
         max($"k").as("max_k"),
         count(lit(1)).as("n"))
-      .orderBy($"event_type")
+      .boundedSort($"event_type")
   }
 
   /** As-of join (graft.operators.TemporalJoin.asOf): each purchase event

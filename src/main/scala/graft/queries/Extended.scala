@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.plans.BoundedSort._
 import graft.sources.Tables
 
 /** Second-wave operator coverage: set ops, null handling, typed JSON,
@@ -31,7 +32,7 @@ object Extended {
         $"c_custkey" === $"o_custkey", "left_semi")
       .select($"c_nationkey".as("nationkey")).distinct()
     withCust.except(withBigOpen)
-      .orderBy($"nationkey")
+      .boundedSort($"nationkey")
   }
 
   /** Column profiler — the data-quality sweep run before any pipeline
@@ -77,7 +78,7 @@ object Extended {
         count(lit(1)).as("n_customers"),
         sum(when($"max_big" > 0.0, 1L).otherwise(0L)).as("n_with_big"),
         sum($"max_big".cast("decimal(18,2)")).cast("double").as("sum_max_big"))
-      .orderBy($"c_nationkey")
+      .boundedSort($"c_nationkey")
   }
 
   private val propsSchema = StructType(Seq(StructField("k", IntegerType)))
@@ -89,7 +90,7 @@ object Extended {
       .select($"event_type", from_json($"props", propsSchema).getField("k").as("k"))
       .groupBy($"event_type", pmod($"k", lit(10)).as("k_bucket"))
       .agg(count(lit(1)).as("n"), sum($"k").cast("long").as("sum_k"))
-      .orderBy($"event_type", $"k_bucket")
+      .boundedSort($"event_type", $"k_bucket")
   }
 
   /** Spark TimeWindow operator (window() function, tumbling 6h) — the
@@ -113,7 +114,7 @@ object Extended {
         countDistinct($"l_partkey").as("n_parts"),
         countDistinct($"l_suppkey", $"l_partkey").as("n_supp_parts"),
         count(lit(1)).as("n_rows"))
-      .orderBy($"l_returnflag")
+      .boundedSort($"l_returnflag")
   }
 
   // ---- rows-only queries (no SQL oracle; driver checks rows>0 shape) ----
@@ -129,7 +130,7 @@ object Extended {
       .agg(
         approx_count_distinct($"l_orderkey", 0.02).as("approx_orders"),
         approx_count_distinct($"l_partkey", 0.02).as("approx_parts"))
-      .orderBy($"l_returnflag")
+      .boundedSort($"l_returnflag")
   }
 
   /** Graft-native HLL distinct sketch (functions.HllDistinct, p = 8 →
@@ -149,7 +150,7 @@ object Extended {
         countDistinct($"l_orderkey").as("true_distinct"))
       .select($"l_returnflag", $"h.est".as("hll_est"),
         $"h.n_zero".as("n_zero"), $"true_distinct")
-      .orderBy($"l_returnflag")
+      .boundedSort($"l_returnflag")
   }
 
   /** Windowed HLL — distinct users per 6h tumbling window per event
@@ -204,7 +205,7 @@ object Extended {
     merged.join(exact, "event_type")
       .select($"event_type", $"h.est".as("hll_est"),
         $"h.n_zero".as("n_zero"), $"true_users")
-      .orderBy($"event_type")
+      .boundedSort($"event_type")
   }
 
   /** Approximate percentiles (KLL-style sketch) — the scale path next to
@@ -219,7 +220,7 @@ object Extended {
       .agg(
         percentile_approx($"l_quantity", lit(0.5), lit(1000)).as("approx_p50"),
         percentile_approx($"l_extendedprice", lit(0.9), lit(1000)).as("approx_p90"))
-      .orderBy($"l_returnflag")
+      .boundedSort($"l_returnflag")
   }
 
   /** Deterministic approximate quantiles via a bottom-k-by-key-hash row
@@ -249,7 +250,7 @@ object Extended {
           .as("p50_price"),
         expr("element_at(sp, CAST(((size(sp)-1)*9) DIV 10 + 1 AS INT))")
           .as("p90_price"))
-      .orderBy($"o_orderstatus")
+      .boundedSort($"o_orderstatus")
   }
 
   /** Per-stratum sampling rates as exact rationals (flag, num, den) —
@@ -297,7 +298,7 @@ object Extended {
       .groupBy($"l_returnflag")
       .agg(count(lit(1)).as("n_sampled"),
         sum(dec($"l_quantity")).cast("double").as("sum_qty"))
-      .orderBy($"l_returnflag")
+      .boundedSort($"l_returnflag")
   }
 
   private def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(18,2)")
@@ -465,7 +466,7 @@ object Extended {
         array_join(transform($"sk", x => x.cast("string")), ",")
           .as("sample_keys"),
         $"n_rows")
-      .orderBy($"l_returnflag")
+      .boundedSort($"l_returnflag")
   }
 
   /** Cross-source distinct-token overlap via KMV (bottom-k / theta-style)
@@ -510,7 +511,11 @@ object Extended {
     val ex = sketches
       .select($"source", explode($"sk").as("v"))
       .withColumn("r", rank($"v"))
-    val srcs = ex.select($"source").distinct()
+    // One row per source already; an empty sketch has no entry to pair.
+    // One partition: the pair joins, the union ranks and both aggregates
+    // then run in one task with no exchange (BoundedSort's ledger).
+    val srcs = sketches.filter(size($"sk") > 0).select($"source")
+      .coalesce(1)
     val pr = srcs.select($"source".as("src_a"))
       .join(srcs.select($"source".as("src_b")), $"src_a" < $"src_b")
     val unionRanked = pr
@@ -535,7 +540,7 @@ object Extended {
       .withColumn("jaccard_est",
         $"n_common".cast("double") / $"k_union".cast("double"))
       .withColumn("est_common", $"jaccard_est" * $"est_union")
-      .orderBy($"src_a", $"src_b")
+      .boundedSort($"src_a", $"src_b")
   }
 
   /** Snapshot novelty via KMV sketch difference — "how much of the new
@@ -582,7 +587,7 @@ object Extended {
       .withColumn("est_novel",
         ($"n_batch_only".cast("double") / $"k_union".cast("double")) *
           $"est_union")
-      .orderBy($"lang")
+      .boundedSort($"lang")
   }
 
   /** Deterministic weighted sample — priority sampling (Duffield,

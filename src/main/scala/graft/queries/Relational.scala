@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.BoundedSort._
 import graft.sources.Tables
 
 /** Relational operator coverage (SURVEY.md §2.2-§2.5): scans with pushdown,
@@ -13,7 +14,8 @@ import graft.sources.Tables
   *
   * Oracle-parity rules (SURVEY.md §5.2): every float aggregate goes through
   * DECIMAL(18,2) (exact, order-independent) and is cast back to double; all
-  * results carry an explicit orderBy; divisions happen in double on
+  * results carry an explicit sort (`boundedSort` where a domain bounds
+  * the rows, see graft.plans.BoundedSort); divisions happen in double on
   * integer-exact inputs so both engines hit identical IEEE ops.
   *
   * Scale notes: only genuinely small dimensions (nation: 25 rows, region: 5)
@@ -40,7 +42,7 @@ object Relational {
         sum(dec($"l_extendedprice") * (lit(1).cast("decimal(18,2)") - dec($"l_discount")))
           .cast("double").as("sum_disc_price"),
         count(lit(1)).as("count_order"))
-      .orderBy($"l_returnflag", $"l_linestatus")
+      .boundedSort($"l_returnflag", $"l_linestatus")
   }
 
   /** Incremental materialized-view refresh (operators.IncrementalAgg):
@@ -69,7 +71,7 @@ object Relational {
         $"total_dec".cast("double").as("total_price"),
         ($"total_dec".cast("double") / $"n_orders".cast("double"))
           .as("avg_price"))
-      .orderBy($"o_orderstatus")
+      .boundedSort($"o_orderstatus")
   }
 
   /** TPC-H Q3 shape (shipping priority): segment-filtered customers semi-
@@ -126,7 +128,7 @@ object Relational {
         sum(dec($"l_extendedprice") * (lit(1).cast("decimal(18,2)") - dec($"l_discount")))
           .cast("double").as("revenue"),
         count(lit(1)).as("n_items"))
-      .orderBy($"r_name", $"n_name")
+      .boundedSort($"r_name", $"n_name")
   }
 
   /** Global top-k (Catalyst TakeOrderedAndProject — no full sort/shuffle). */
@@ -161,7 +163,7 @@ object Relational {
       .withColumn("label", when($"c_custkey".isNull, 0).otherwise(1))
       .groupBy($"o_orderstatus", $"label")
       .agg(count(lit(1)).as("n_orders"))
-      .orderBy($"o_orderstatus", $"label")
+      .boundedSort($"o_orderstatus", $"label")
   }
 
   /** Left-semi join (EXISTS): customers that placed at least one order. */
@@ -172,7 +174,7 @@ object Relational {
         $"c_custkey" === $"o_custkey", "left_semi")
       .groupBy($"c_nationkey")
       .agg(count(lit(1)).as("n_customers"))
-      .orderBy($"c_nationkey")
+      .boundedSort($"c_nationkey")
   }
 
   /** Left-anti join (NOT EXISTS): customers with no high-value order.
@@ -186,7 +188,7 @@ object Relational {
         $"c_custkey" === $"o_custkey", "left_anti")
       .groupBy($"c_nationkey")
       .agg(count(lit(1)).as("n_customers"))
-      .orderBy($"c_nationkey")
+      .boundedSort($"c_nationkey")
   }
 
   /** J1+J2 shape (reference Predictor.scala:213-243): fact/edge table joined
@@ -205,7 +207,7 @@ object Relational {
       .agg(
         count(lit(1)).as("n_lines"),
         sum(dec($"l_quantity")).cast("double").as("sum_qty"))
-      .orderBy($"p_brand", $"s_nationkey")
+      .boundedSort($"p_brand", $"s_nationkey")
   }
 
   /** ROLLUP grouping sets over orders (agg coverage the reference lacks,
@@ -218,7 +220,7 @@ object Relational {
       .agg(
         count(lit(1)).as("n_orders"),
         sum(dec($"o_totalprice")).cast("double").as("sum_price"))
-      .orderBy($"o_orderstatus".asc_nulls_first, $"o_orderpriority".asc_nulls_first)
+      .boundedSort($"o_orderstatus".asc_nulls_first, $"o_orderpriority".asc_nulls_first)
   }
 
   /** String-function surface over part: regexp extraction, case mapping,
@@ -252,7 +254,7 @@ object Relational {
       .agg(sum(dec($"l_quantity")).cast("double"))
       .withColumnsRenamed(Map("F" -> "f_qty", "O" -> "o_qty"))
       .na.fill(Map("f_qty" -> 0.0, "o_qty" -> 0.0))
-      .orderBy($"l_returnflag")
+      .boundedSort($"l_returnflag")
   }
 
   /** CUBE grouping sets (all 4 combinations; rollup's 3-set sibling). */
@@ -264,7 +266,7 @@ object Relational {
       .agg(
         count(lit(1)).as("n_orders"),
         sum(dec($"o_totalprice")).cast("double").as("sum_price"))
-      .orderBy($"o_orderstatus".asc_nulls_first, $"o_orderpriority".asc_nulls_first)
+      .boundedSort($"o_orderstatus".asc_nulls_first, $"o_orderpriority".asc_nulls_first)
   }
 
   /** Exact percentiles per group (sort-based exact `percentile`, the
@@ -283,7 +285,7 @@ object Relational {
         percentile($"l_quantity", lit(0.5)).as("p50"),
         percentile($"l_quantity", lit(0.75)).as("p75"),
         count(lit(1)).as("n_rows"))
-      .orderBy($"l_returnflag")
+      .boundedSort($"l_returnflag")
   }
 
   /** Relational threshold-sweep metrics (A5' — replaces the reference's
@@ -332,7 +334,7 @@ object Relational {
       .select($"tier",
         expr("(n * (n - 1)) div 2").as("n_pairs"),
         ($"n" - 1).as("n_left"))
-      .orderBy($"tier".asc_nulls_first)
+      .boundedSort($"tier".asc_nulls_first)
   }
 
   /** Full-outer join: per-customer order stats stitched onto the customer
@@ -353,7 +355,7 @@ object Relational {
         ($"n_big".isNotNull).as("has_big"),
         ($"c_custkey".isNotNull).as("known_customer"))
       .agg(count(lit(1)).as("n"))
-      .orderBy($"nationkey", $"has_big", $"known_customer")
+      .boundedSort($"nationkey", $"has_big", $"known_customer")
   }
 
   /** Intersect (the set op nationDelta's except leaves uncovered):
@@ -372,7 +374,7 @@ object Relational {
           .filter($"o_orderstatus" === "O" && $"o_totalprice" > 496000.0),
         $"c_custkey" === $"o_custkey", "left_semi")
       .select($"c_nationkey".as("nationkey"))
-    richCust.intersect(bigOrders).orderBy($"nationkey")
+    richCust.intersect(bigOrders).boundedSort($"nationkey")
   }
 
   /** Window-function suite beyond row_number: lag/lead, first_value,
@@ -514,7 +516,7 @@ object Relational {
         count(lit(1)).as("n_orders"),
         sum(when($"o_totalprice" > $"avg_price", 1L).otherwise(0L))
           .as("n_above_avg"))
-      .orderBy($"o_orderpriority")
+      .boundedSort($"o_orderpriority")
   }
 
   /** Selective fact⋈dim join with Bloom pre-join pruning
@@ -539,7 +541,7 @@ object Relational {
       .agg(
         count(lit(1)).as("n_items"),
         sum(dec($"l_quantity")).cast("double").as("sum_qty"))
-      .orderBy($"l_returnflag")
+      .boundedSort($"l_returnflag")
   }
 
   /** Point-in-interval join via bucket decomposition
@@ -563,7 +565,7 @@ object Relational {
       .agg(
         count(lit(1)).as("n_orders"),
         sum(dec($"o_totalprice")).cast("double").as("sum_price"))
-      .orderBy($"band")
+      .boundedSort($"band")
   }
 
   /** Correlated-EXISTS with a non-equi predicate (TPC-H Q4 shape): orders
@@ -585,7 +587,7 @@ object Relational {
         "left_semi")
       .groupBy($"o_orderpriority")
       .agg(count(lit(1)).as("n_late"))
-      .orderBy($"o_orderpriority")
+      .boundedSort($"o_orderpriority")
   }
 
   /** Ordered aggregation (LISTAGG / string_agg): per nation, the top-5

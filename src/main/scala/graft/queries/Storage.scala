@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.BoundedSort._
 import graft.sources.Tables
 
 /** Driver-visible evidence queries for the storage/streaming families
@@ -250,11 +251,12 @@ object Storage {
         .agg(count(lit(1)).as("n_orders"),
           sum($"o_totalprice".cast("decimal(18,2)")).cast("double")
             .as("total_price"))
-        .orderBy($"segment")
-      val out = agg.collect() // one row per mktsegment (5) — tiny
+        .boundedSort($"segment")
+      // one row per mktsegment (5), collected in segment order, which
+      // one partition keeps
+      val out = agg.collect()
       s.createDataFrame(s.sparkContext.parallelize(out.toIndexedSeq, 1),
           agg.schema)
-        .orderBy($"segment")
     } finally dropTables()
   }
 
@@ -428,7 +430,7 @@ object Storage {
       .agg(count(lit(1)).as("n_events"),
         sum($"value".cast("decimal(18,2)")).cast("double").as("value_sum"),
         sum($"event_id").as("id_sum"))
-      .orderBy($"event_type")
+      .boundedSort($"event_type")
   }
 
   /** Copy-on-write MERGE evidence (sources.Upsert): write a base
@@ -535,7 +537,7 @@ object Storage {
       .agg(count(lit(1)).as("n_rows"),
         sum($"bal".cast("decimal(18,2)")).cast("double").as("bal_sum"),
         sum($"custkey").as("key_sum"))
-      .orderBy($"seg")
+      .boundedSort($"seg")
   }
 
   /** Z-order layout evidence (sources.ZOrder + SkippingIndex) with a

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextOps
+import graft.plans.BoundedSort._
 import graft.sources.Tables
 
 /** Text-analysis operators over the documents table: tokenization, token
@@ -39,7 +40,7 @@ object TextAnalysis {
         (sum($"n_tokens").cast("double") / count(lit(1)).cast("double"))
           .as("avg_tokens"),
         sum($"n_chars").as("total_chars"))
-      .orderBy($"lang")
+      .boundedSort($"lang")
   }
 
   private val stopwords = Seq("the", "a", "of", "and", "to", "in", "is")
@@ -1046,7 +1047,7 @@ object TextAnalysis {
         $"distinct_bigrams",
         ($"distinct_bigrams".cast("double") / $"n_tokens".cast("double"))
           .as("bigram_diversity"))
-      .orderBy($"source")
+      .boundedSort($"source")
   }
 
   /** Incremental near-dup ingest: n-gram Jaccard pairs restricted to
@@ -1743,7 +1744,7 @@ object TextAnalysis {
       .withColumn("tokens_per_100cp",
         (lit(100) * $"total_tokens" /
           nullif($"total_codepoints", lit(0L))).cast("long"))
-      .orderBy($"source")
+      .boundedSort($"source")
   }
 
   /** The q_bpe_tokens oracle from the session-memoized model (the SQL
@@ -2058,7 +2059,7 @@ object TextAnalysis {
         sum($"q2".cast("long")).as("n_lang"),
         sum($"q3".cast("long")).as("n_exact"),
         sum($"q4".cast("long")).as("n_final"))
-      .orderBy($"source")
+      .boundedSort($"source")
   }
 
   /** Winnowing-based corpus dedup end-to-end: fingerprint-overlap pairs

@@ -25,4 +25,10 @@ object GraftBridge {
     * lazy artifact state. */
   def artifactIsolated(spark: SparkSession): Boolean =
     spark.sessionState.artifactManager.state != null
+
+  /** Blocks until `spark`'s listeners have seen every event posted so far
+    * (the listener bus is private[spark]), so Scratch and the specs count
+    * jobs and stages without sleeping. */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -1,7 +1,17 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec,
+  FilterExec, InputAdapter, ProjectExec, RDDScanExec, SortExec, SparkPlan,
+  WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec,
+  ShuffleExchangeLike}
+import org.apache.spark.sql.execution.window.WindowGroupLimitExec
+import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
 
@@ -196,8 +206,8 @@ class PlanShapeSpec extends SparkSpec {
     // sort) never appear there and a bound on it is vacuous (ADVICE
     // r14). AQE hides the final plan inside a leaf AdaptiveSparkPlanExec,
     // so apply EnsureRequirements to the bare plan directly. Budget: the
-    // post-filter group-by (hash) + the output orderBy (range) = 2; the
-    // map-only draw itself adds none.
+    // post-filter group-by (hash) + one for the output sort = 2 (the
+    // bounded sort adds none); the map-only draw itself adds none.
     val prepared = org.apache.spark.sql.execution.exchange
       .EnsureRequirements().apply(df.queryExecution.sparkPlan)
     val exchanges = prepared.collect {
@@ -245,7 +255,7 @@ class PlanShapeSpec extends SparkSpec {
           maxPairEstimate = 0L)
       }
       assert(e.getMessage.contains("q_minhash_neardup"))
-      org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext)
+      org.apache.spark.sql.GraftBridge.drainListeners(spark)
       // only the analytic probes may run first: the dup probe (one
       // agg, possibly session-memoized to zero) and the block-mass
       // count (one agg head) — under AQE each agg is 3-4 stage-jobs,
@@ -256,5 +266,153 @@ class PlanShapeSpec extends SparkSpec {
     // and the shipped budget admits the sf0.001 corpus untouched
     assert(graft.queries.Extended.multisetPairs(spark, sf("sf0.001"))
       .limit(1).count() >= 0)
+  }
+
+  /** The plan a run of `df` executed: AQE's final plan once `df` ran. */
+  private def ranPlan(df: DataFrame): SparkPlan = {
+    df.collect()
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+  }
+
+  /** Every node of `plan`, query stages and reused exchanges included. */
+  private def allNodes(plan: SparkPlan): Seq[SparkPlan] = plan +: (plan match {
+    case q: QueryStageExec => allNodes(q.plan)
+    case r: ReusedExchangeExec => allNodes(r.child)
+    case p => p.children.flatMap(allNodes)
+  })
+
+  private def rangeExchanges(plan: SparkPlan): Seq[SparkPlan] =
+    allNodes(plan).collect {
+      case e: ShuffleExchangeLike
+          if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+
+  /** The nodes of the stage under `node`, down to its query stages. */
+  private def stageOf(node: SparkPlan): Seq[SparkPlan] = node +: (node match {
+    case _: QueryStageExec => Nil
+    case p => p.children.flatMap(stageOf)
+  })
+
+  /** The exchange a shuffle stage wrote, past a reuse. */
+  private def exchangeOf(q: ShuffleQueryStageExec): SparkPlan = q.plan match {
+    case r: ReusedExchangeExec => r.child
+    case e => e
+  }
+
+  /** Whether `p` is an aggregate's output, past the operators that only
+    * project, filter, sort or limit it. */
+  private def aggregateOutput(p: SparkPlan): Boolean = p match {
+    case _: BaseAggregateExec => true
+    case _: WholeStageCodegenExec | _: InputAdapter | _: ProjectExec |
+        _: FilterExec | _: SortExec | _: WindowGroupLimitExec =>
+      aggregateOutput(p.children.head)
+    case _ => false
+  }
+
+  /** The queries whose final sort is `boundedSort`, with its keys
+    * (BoundedSort's ledger; q_bucketed_join sorts inside the query and
+    * returns the collected rows, so its frame holds no sort). */
+  private val boundedSorts: Seq[(String, Seq[String])] = Seq(
+    "q_pricing_summary" -> Seq("l_returnflag", "l_linestatus"),
+    "q_mv_refresh" -> Seq("o_orderstatus"),
+    "q_label_join" -> Seq("o_orderstatus", "label"),
+    "q_region_revenue" -> Seq("r_name", "n_name"),
+    "q_customers_with_orders" -> Seq("c_nationkey"),
+    "q_customers_without_orders" -> Seq("c_nationkey"),
+    "q_triplet_join" -> Seq("p_brand", "s_nationkey"),
+    "q_orders_rollup" -> Seq("o_orderstatus", "o_orderpriority"),
+    "q_orders_cube" -> Seq("o_orderstatus", "o_orderpriority"),
+    "q_pivot_status" -> Seq("l_returnflag"),
+    "q_quantiles" -> Seq("l_returnflag"),
+    "q_skew_join" -> Seq("o_orderpriority"),
+    "q_bloom_prune" -> Seq("l_returnflag"),
+    "q_price_bands" -> Seq("band"),
+    "q_late_orders" -> Seq("o_orderpriority"),
+    "q_nullsafe_join" -> Seq("tier"),
+    "q_full_outer" -> Seq("nationkey", "has_big", "known_customer"),
+    "q_nation_intersect" -> Seq("nationkey"),
+    "q_nation_delta" -> Seq("nationkey"),
+    "q_null_fill" -> Seq("c_nationkey"),
+    "q_json_typed" -> Seq("event_type", "k_bucket"),
+    "q_distinct_counts" -> Seq("l_returnflag"),
+    "q_approx_distinct" -> Seq("l_returnflag"),
+    "q_hll_distinct" -> Seq("l_returnflag"),
+    "q_hll_merge" -> Seq("event_type"),
+    "q_approx_quantiles" -> Seq("l_returnflag"),
+    "q_hash_quantiles" -> Seq("o_orderstatus"),
+    "q_stratified_sample" -> Seq("l_returnflag"),
+    "q_bottomk_sample" -> Seq("l_returnflag"),
+    "q_sketch_overlap" -> Seq("src_a", "src_b"),
+    "q_sketch_delta" -> Seq("lang"),
+    "q_json_props" -> Seq("event_type"),
+    "q_token_stats" -> Seq("lang"),
+    "q_source_diversity" -> Seq("source"),
+    "q_bpe_tokens" -> Seq("source"),
+    "q_pipeline_funnel" -> Seq("source"),
+    "q_embed_stats" -> Seq("label"),
+    "q_embed_centroids" -> Seq("label", "dim"),
+    "q_stream_dedup" -> Seq("event_type"),
+    "q_evolved_read" -> Seq("seg"))
+
+  /** Queries whose single task may also scan a pinned frame (Caches.pin)
+    * that holds one row per domain value: q_sketch_overlap's sketch frame,
+    * a row per source. */
+  private val pinnedDomainScans = Set("q_sketch_overlap")
+
+  test("bounded sorts: no range exchange, and the single task reads only " +
+    "aggregate output (no scan, and no join or window over raw rows)") {
+    val faults = boundedSorts.flatMap { case (name, _) =>
+      val plan = ranPlan(query(name))
+      val single = allNodes(plan).collect {
+        case c: CoalesceExec if c.numPartitions == 1 => c
+      }
+      val found = (if (rangeExchanges(plan).nonEmpty) Seq("a range exchange")
+        else Nil) ++ (if (single.isEmpty) Seq("no single-partition step")
+        else Nil) ++ single.flatMap(stageOf).collect {
+        case q: ShuffleQueryStageExec
+            if !aggregateOutput(exchangeOf(q).children.head) =>
+          "a shuffle of raw rows"
+        case leaf if leaf.children.isEmpty &&
+            !leaf.isInstanceOf[QueryStageExec] &&
+            !(pinnedDomainScans(name) && leaf.isInstanceOf[RDDScanExec]) =>
+          s"a ${leaf.nodeName} scan"
+      }
+      found.distinct.map(f => s"$name: $f\n$plan")
+    }
+    assert(faults.isEmpty, faults.mkString("\n"))
+  }
+
+  /** The floor queries' bounded sorts: after a run the final plan holds no
+    * range exchange, and the rows are those of the same frame sorted with
+    * `orderBy`, in the same order. */
+  Seq("q_pricing_summary", "q_skew_join", "q_stream_dedup",
+      "q_sketch_overlap").foreach { name =>
+    test(s"$name: a bounded sort, no range exchange, rows in orderBy order") {
+      val keys: Seq[Column] = boundedSorts.toMap.apply(name).map(col)
+      val df = query(name)
+      val plan = ranPlan(df)
+      assert(rangeExchanges(plan).isEmpty, plan.toString)
+      val rows = df.collect().toSeq
+      assert(rows.nonEmpty)
+      assert(rows === df.orderBy(keys: _*).collect().toSeq)
+    }
+  }
+
+  test("q_pricing_summary: a warm call starts at most 2 jobs (the " +
+    "aggregate's map stage and the result, no range-sort sampling job)") {
+    def call(): Unit =
+      query("q_pricing_summary").write.format("noop").mode("overwrite").save()
+    call()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    withListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    })(call())
+    assert(jobs.get <= 2, s"jobs=${jobs.get}")
   }
 }

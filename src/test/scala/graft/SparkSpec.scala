@@ -30,7 +30,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.addSparkListener(listener)
     try {
       val r = body
-      org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext)
+      org.apache.spark.sql.GraftBridge.drainListeners(spark)
       r
     } finally spark.sparkContext.removeSparkListener(listener)
   }

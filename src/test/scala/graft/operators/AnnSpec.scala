@@ -754,7 +754,7 @@ class AnnSpec extends SparkSpec {
       assert(e.getMessage.contains("ivfTopK"))
       assert(e.getMessage.contains("q_ivf_topk"))
       assert(!e.getMessage.contains("nBitsForCorpus"))
-      org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext)
+      org.apache.spark.sql.GraftBridge.drainListeners(spark)
       // analytic gate: dim take(1) + dup probe + query count — a
       // refactor that moves the require after an eager action on the
       // bucket join (signatures + shuffle + exchange) blows this bound

@@ -77,7 +77,7 @@ class DupProbeSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       body
-      org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext)
+      org.apache.spark.sql.GraftBridge.drainListeners(spark)
     } finally spark.sparkContext.removeSparkListener(listener)
     jobs.get()
   }

@@ -30,7 +30,7 @@ class StreamDedupSpec extends SparkSpec {
     spark.streams.addListener(listener)
     val got = try {
       val rows = Storage.streamDedup(spark, dir).collect().toSeq
-      org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext)
+      org.apache.spark.sql.GraftBridge.drainListeners(spark)
       rows
     } finally spark.streams.removeListener(listener)
 
